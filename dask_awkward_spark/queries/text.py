@@ -519,7 +519,7 @@ FROM packed GROUP BY 1, 2
 
 # ---- PII redaction ----
 
-_EMAIL_RE = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
+_EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 _LONGNUM_RE = "[0-9]{7,}"
 
 

@@ -11,10 +11,90 @@ unproject_layout) disappears entirely.
 
 from __future__ import annotations
 
+import os
+import threading
+from collections import OrderedDict
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..core import NestedArray
+
+#: listings whose inferred schema :func:`from_parquet` remembers (LRU)
+_SCHEMA_CACHE_SIZE = 64
+_SCHEMA_CACHE: "OrderedDict[tuple, StructType]" = OrderedDict()
+_SCHEMA_LOCK = threading.Lock()
+
+#: session confs that change what parquet schema inference returns
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.caseSensitive",
+)
+
+#: Hadoop glob metacharacters: a path holding one is a pattern, not a file
+_GLOB_CHARS = frozenset("*?[]{}\\")
+
+
+def _local_path(p: str) -> "str | None":
+    """``p`` as a local filesystem path, or None when it is relative (the
+    JVM resolves those against its own working directory), a glob, a
+    non-``file`` URI, or does not exist."""
+    if p.startswith("file:"):
+        p = p[len("file:"):]
+        if p.startswith("//"):
+            if not p.startswith("///"):
+                return None  # file://host/... names a remote authority
+            p = p[2:]
+        if "%" in p:
+            return None  # percent-encoded URI: let Spark decode it
+    if not os.path.isabs(p) or ":" in p or _GLOB_CHARS.intersection(p):
+        return None
+    return p if os.path.exists(p) else None
+
+
+def _file_stats(p: str, out: list) -> bool:
+    """Append ``(path, size, mtime_ns, inode)`` for ``p`` and every file
+    under it; False when a symlinked directory is met (its contents could
+    change without touching anything the walk stats)."""
+    if not os.path.isdir(p):
+        st = os.stat(p)
+        out.append((p, st.st_size, st.st_mtime_ns, st.st_ino))
+        return True
+    with os.scandir(p) as it:
+        for e in it:
+            if e.is_dir(follow_symlinks=False):
+                if not _file_stats(e.path, out):
+                    return False
+            elif e.is_symlink() and os.path.isdir(e.path):
+                return False
+            else:
+                st = e.stat()
+                out.append((e.path, st.st_size, st.st_mtime_ns, st.st_ino))
+    return True
+
+
+def _listing_signature(spark: SparkSession, paths: "list[str]") -> "tuple | None":
+    """What parquet schema inference over ``paths`` depends on: the
+    application, the inference-relevant confs and every file's identity
+    and stat. None (no caching) unless every path is local and exists."""
+    files: list = []
+    try:
+        for p in paths:
+            lp = _local_path(p)
+            if lp is None or not _file_stats(lp, files):
+                return None
+    except OSError:  # a file vanished mid-walk: infer as usual
+        return None
+    if not files:
+        return None
+    confs = tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS)
+    return (spark.sparkContext.applicationId, confs, tuple(sorted(files)))
 
 
 def from_parquet(
@@ -28,9 +108,36 @@ def from_parquet(
     ``columns=`` projects eagerly (scan-level pruning); ``report=True``
     returns a second DataFrame of per-file row counts — the analogue of the
     reference's success/failure report records (lib/io/parquet.py:36-61).
+
+    Schema inference runs a Spark job per read, so the inferred
+    ``StructType`` (never a DataFrame) is remembered in a module-level LRU
+    of ``_SCHEMA_CACHE_SIZE`` (64) listings, and a repeated read of unchanged
+    files passes it to ``spark.read.schema`` instead: zero jobs until an
+    action. The key is the application id, the session confs in
+    ``_INFERENCE_CONFS``, and the sorted ``(path, size, mtime_ns, inode)``
+    of every file under ``path``, so an overwrite, an in-place rewrite,
+    an added or removed file, or a conf change misses and re-infers. Only
+    absolute plain or ``file:`` local paths that exist, hold no glob
+    character and reach no symlinked directory are keyed; any other path
+    (relative, object stores, HDFS, globs) infers on every call, as
+    before.
     """
     paths = path if isinstance(path, list) else [path]
-    df = spark.read.parquet(*paths)
+    sig = _listing_signature(spark, paths)
+    with _SCHEMA_LOCK:
+        schema = _SCHEMA_CACHE.get(sig) if sig is not None else None
+        if schema is not None:
+            _SCHEMA_CACHE.move_to_end(sig)
+    if schema is not None:
+        df = spark.read.schema(schema).parquet(*paths)
+    else:
+        df = spark.read.parquet(*paths)
+        # cache only when the files did not move under the inference
+        if sig is not None and _listing_signature(spark, paths) == sig:
+            with _SCHEMA_LOCK:
+                _SCHEMA_CACHE[sig] = df.schema
+                while len(_SCHEMA_CACHE) > _SCHEMA_CACHE_SIZE:
+                    _SCHEMA_CACHE.popitem(last=False)
     if columns is not None:
         df = df.select(*columns)
     arr = NestedArray(df, F.struct(*[F.col(c) for c in df.columns]))

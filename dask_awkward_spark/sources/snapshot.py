@@ -1531,9 +1531,12 @@ def _coalesce_local_relation(df: DataFrame) -> DataFrame:
     write) splits into up to one partition per ROW at execution, which
     would land one near-empty data file per row. Coalesce such frames
     to one task before staging; every other plan shape passes through
-    untouched (scan-fed frames keep their parallelism)."""
+    untouched (scan-fed frames keep their parallelism). The OPTIMIZED
+    plan is inspected, as in ``session.local_rows_table``: a VALUES
+    insert analyzes to a cast projection over the literal rows, which
+    only the optimizer folds into one LocalRelation."""
     try:
-        lg = df._jdf.queryExecution().analyzed()
+        lg = df._jdf.queryExecution().optimizedPlan()
         if (
             lg.getClass().getSimpleName() == "LocalRelation"
             and lg.data().size() > 1
@@ -4707,6 +4710,10 @@ def _data_reader(spark: SparkSession, schema: StructType):
     return spark.read.schema(schema).option("recursiveFileLookup", "true")
 
 
+#: a deletion-vector file's columns: data-file basename, row position
+_DV_SCHEMA = "file string, pos bigint"
+
+
 def _visible_tagged(spark: SparkSession, path: str, m: dict, rels: "list[str]") -> DataFrame:
     """The version's VISIBLE rows for the given files, tagged with
     ``__dak_file``/``__dak_pos`` (data-file basename + row position):
@@ -4736,9 +4743,11 @@ def _visible_tagged(spark: SparkSession, path: str, m: dict, rels: "list[str]") 
     dvs = m.get("deletes") or []
     if not dvs:
         return tagged
-    dv = spark.read.parquet(*[os.path.join(path, d) for d in dvs]).select(
-        F.col("file").alias("__dak_file"), F.col("pos").alias("__dak_pos")
-    )
+    # both DV writers (snapshot_delete, snapshot_update merge-on-read)
+    # stage exactly these types: pinning them skips an inference job
+    dv = spark.read.schema(_DV_SCHEMA).parquet(
+        *[os.path.join(path, d) for d in dvs]
+    ).select(F.col("file").alias("__dak_file"), F.col("pos").alias("__dak_pos"))
     return tagged.join(F.broadcast(dv), ["__dak_file", "__dak_pos"], "left_anti")
 
 
@@ -5921,9 +5930,16 @@ def _stage_data_and_changes(
         return files, stats, None, None
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
+    # the worker runs under the caller's local properties and tags (job
+    # group, scheduler pool, description), captured here on its thread
+    stage_changes = inheritable_thread_target(chg_parts[0][0].sparkSession)(
+        _stage_changes
+    )
     with ThreadPoolExecutor(max_workers=1) as ex:
         fut = ex.submit(
-            _stage_changes, chg_parts, path, compression, column_mapping
+            stage_changes, chg_parts, path, compression, column_mapping
         )
         try:
             files, stats = stage_data()

@@ -138,6 +138,30 @@ def test_timestamp_values_fall_back(spark, tmp_path):
     assert len(out) == 1 and out[0]["ts"].hour == 10
 
 
+def test_timestamp_values_insert_stages_one_file(spark, tmp_path):
+    """A multi-row VALUES insert outside the literal fast path (timestamps)
+    still stages ONE data file, not one per row: its analyzed plan is a
+    cast projection, so the fan-out guard must read the optimized plan."""
+    from dask_awkward_spark.sources.sqlface import snapshot_sql
+
+    p = str(tmp_path / "tts8")
+    tables = {"t": p}
+    snapshot_sql(
+        spark, f"CREATE TABLE t (k BIGINT, ts TIMESTAMP) LOCATION '{p}'", tables
+    )
+    values = ", ".join(
+        f"({i}, TIMESTAMP'2020-03-0{i + 1} 10:00:00')" for i in range(8)
+    )
+    snapshot_sql(spark, f"INSERT INTO t VALUES {values}", tables)
+    head = _versions(p)[-1]
+    added = set(_read_manifest(p, head)["files"]) - set(
+        _read_manifest(p, head - 1)["files"]
+    )
+    assert len(added) == 1, added
+    got = sorted((r.k, r.ts.day) for r in snapshot_read(spark, p).collect())
+    assert got == [(i, i + 1) for i in range(8)]
+
+
 def test_partitioned_literal_keeps_spark_writer(spark, tmp_path):
     """Hive layout needs the shadow/partitionBy machinery — the fast
     path must not fire, and the layout must come out as usual."""

@@ -540,6 +540,22 @@ def test_pack_sequences_budget_respected(spark):
         assert sorted(ids) == list(range(len(ids))), src
 
 
+def test_text_queries_compile_without_escape_warnings():
+    """The regex literals in queries/text.py are raw strings: compiling
+    the module raises no invalid-escape DeprecationWarning (a
+    SyntaxWarning on newer Pythons)."""
+    import warnings
+
+    import dask_awkward_spark.queries.text as qt
+
+    with open(qt.__file__, encoding="utf-8") as f:
+        src = f.read()
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", DeprecationWarning)
+        warnings.simplefilter("error", SyntaxWarning)
+        compile(src, qt.__file__, "exec")
+
+
 def test_pii_redact_semantics(spark):
     import dask_awkward_spark as das
     from pyspark.sql import functions as F

@@ -646,3 +646,195 @@ def test_scan_partitions_estimate_matches_rdd_probe(spark, tmp_path):
         assert est2 == probe(), (est2, probe())
     finally:
         spark.conf.unset("spark.sql.files.minPartitionNum")
+
+
+# ---- from_parquet's inferred-schema cache ----
+
+
+def _last_job(spark):
+    ids = spark.sparkContext.statusTracker().getJobIdsForGroup() or []
+    return max(ids) if ids else -1
+
+
+def _jobs_of(spark, fn):
+    before = _last_job(spark)
+    out = fn()
+    return _last_job(spark) - before, out
+
+
+def _write_nested(path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(path)
+    for i in range(3):
+        cols = {
+            "id": pa.array([i * 10 + j for j in range(4)], pa.int64()),
+            "parts": pa.array(
+                [[{"pt": float(j), "q": j % 2}] * j for j in range(4)],
+                pa.list_(pa.struct([("pt", pa.float64()), ("q", pa.int32())])),
+            ),
+            "tags": pa.array([["a", "b"][:j] for j in range(4)], pa.list_(pa.string())),
+            "meta": pa.array(
+                [{"src": f"f{i}", "w": {"v": j}} for j in range(4)],
+                pa.struct([("src", pa.string()), ("w", pa.struct([("v", pa.int64())]))]),
+            ),
+        }
+        pq.write_table(pa.table(cols), os.path.join(path, f"part-{i}.parquet"))
+
+
+def test_from_parquet_warm_read_runs_no_job(spark, tmp_path):
+    """A repeated scan of unchanged local files reuses the inferred
+    schema (nested structs, list<string>): zero Spark jobs until an
+    action, the same schema and answer as plain inference."""
+    p = str(tmp_path / "ev")
+    _write_nested(p)
+    cold, _ = _jobs_of(spark, lambda: from_parquet(spark, p))
+    assert cold >= 1  # schema inference is a Spark job
+    warm, a = _jobs_of(spark, lambda: from_parquet(spark, p))
+    assert warm == 0
+    ref = spark.read.parquet(p)
+    assert a._df.schema == ref.schema
+    assert sorted(a._df.collect()) == sorted(ref.collect())
+    b = from_parquet(spark, p, columns=["id", "tags"])
+    assert b._df.schema == ref.select("id", "tags").schema
+    # the file: URI spelling and a list of files are keyed the same way
+    assert _jobs_of(spark, lambda: from_parquet(spark, "file://" + p))[0] == 0
+    files = sorted(str(f) for f in (tmp_path / "ev").iterdir())
+    from_parquet(spark, files)
+    assert _jobs_of(spark, lambda: from_parquet(spark, files))[0] == 0
+
+
+def _nanos_file(path):
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(path)
+    ts = np.array([1, 2, 3], dtype="datetime64[ns]")
+    pq.write_table(
+        pa.table({"ts": pa.array(ts), "k": pa.array([1, 2, 3])}),
+        os.path.join(path, "a.parquet"),
+        version="2.6",
+        coerce_timestamps=None,
+    )
+
+
+@pytest.mark.parametrize("layout", ["hive", "nanos"])
+def test_from_parquet_cached_schema_equals_inference(spark, tmp_path, layout):
+    """The cached schema is exactly what plain inference returns for hive
+    partition columns and for a TIMESTAMP(NANOS) file read as bigint
+    under nanosAsLong."""
+    p = str(tmp_path / layout)
+    nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    if layout == "hive":
+        spark.range(12).selectExpr(
+            "id", "array(cast(id AS string)) AS tags", "id % 3 AS day"
+        ).write.partitionBy("day").parquet(p)
+    else:
+        _nanos_file(p)
+        spark.conf.set(nanos, "true")
+    try:
+        from_parquet(spark, p)
+        jobs, arr = _jobs_of(spark, lambda: from_parquet(spark, p))
+        ref = spark.read.parquet(p)
+        assert jobs == 0
+        assert arr._df.schema == ref.schema
+        assert sorted(arr._df.collect()) == sorted(ref.collect())
+        if layout == "nanos":
+            # the inference conf is part of the key: flipping it back
+            # takes Spark's own path, which rejects TIMESTAMP(NANOS)
+            spark.conf.unset(nanos)
+            with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL|NANOS"):
+                from_parquet(spark, p)
+    finally:
+        spark.conf.unset(nanos)
+
+
+def test_from_parquet_sees_changed_files(spark, tmp_path):
+    """Every change to the listing re-infers: an overwrite with a new
+    schema, an in-place rewrite of one file, and an added file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = str(tmp_path / "t")
+    to_parquet(spark.range(5).selectExpr("id AS a"), p)
+    assert from_parquet(spark, p)._df.columns == ["a"]
+    to_parquet(spark.range(5).selectExpr("id AS a", "'x' AS b"), p)
+    assert from_parquet(spark, p)._df.columns == ["a", "b"]
+
+    q = str(tmp_path / "one")
+    os.makedirs(q)
+    f = os.path.join(q, "f.parquet")
+    pq.write_table(pa.table({"a": [1]}), f)
+    assert from_parquet(spark, q)._df.columns == ["a"]
+    pq.write_table(pa.table({"a": [1], "c": [[1.5]]}), f)
+    arr = from_parquet(spark, q)
+    assert arr._df.schema == spark.read.parquet(q).schema
+    assert arr._df.columns == ["a", "c"]
+
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try:
+        assert from_parquet(spark, q)._df.columns == ["a", "c"]
+        pq.write_table(pa.table({"a": [2], "d": ["z"]}), os.path.join(q, "g.parquet"))
+        arr = from_parquet(spark, q)
+        assert arr._df.schema == spark.read.parquet(q).schema
+        assert sorted(arr._df.columns) == ["a", "c", "d"]
+        assert sorted(r.a for r in arr._df.collect()) == [1, 2]
+    finally:
+        spark.conf.unset("spark.sql.parquet.mergeSchema")
+
+
+def test_from_parquet_glob_path_still_infers(spark, tmp_path):
+    """A glob is a pattern, not a listing: every call infers, as before."""
+    p = str(tmp_path / "g")
+    _write_nested(p)
+    pattern = os.path.join(p, "part-*.parquet")
+    from_parquet(spark, pattern)
+    jobs, arr = _jobs_of(spark, lambda: from_parquet(spark, pattern))
+    assert jobs >= 1
+    assert arr._df.schema == spark.read.parquet(p).schema
+
+
+def test_from_parquet_schema_cache_threads(spark, tmp_path, monkeypatch):
+    """Threads sharing the LRU (shrunk to force evictions) each get their
+    own path's inferred schema, and the cache never outgrows its bound."""
+    import sys
+    import threading
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import dask_awkward_spark.sources.parquet as sp
+
+    monkeypatch.setattr(sp, "_SCHEMA_CACHE_SIZE", 2)
+    paths = []
+    for i in range(4):
+        p = str(tmp_path / f"d{i}")
+        os.makedirs(p)
+        pq.write_table(pa.table({f"c{i}": [i]}), os.path.join(p, "a.parquet"))
+        paths.append(p)
+    wrong, errors = [], []
+
+    def worker(k):
+        try:
+            for j in range(4):
+                i = (k + j) % len(paths)
+                if from_parquet(spark, paths[i])._df.columns != [f"c{i}"]:
+                    wrong.append((k, i))
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=worker, args=(k,)) for k in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors and not wrong, (errors, wrong)
+    assert len(sp._SCHEMA_CACHE) <= 2
