@@ -318,17 +318,16 @@ def _txn_publish(staged: dict) -> "list[str]":
         if len(vs) > 1:
             out["op"] = "txn"
             out.pop("changes", None)
-            # deferred change staging never materialized: the collapse
-            # drops change files anyway, so the per-statement staging
-            # write jobs were saved outright (guide §1.2: don't compute
-            # what you throw away)
+            # the change staging _rewrite_commit deferred never
+            # materialized: the collapse drops change files anyway, so
+            # the per-statement staging write jobs were saved outright
+            # (guide §1.2: don't compute what you throw away)
             out.pop(_CHANGES_LAZY, None)
         elif _CHANGES_LAZY in out:
             # single-statement chain publishes with its real op and its
-            # row-level change files: materialize the deferred staging
-            # exactly once, at the publish
-            parts, pth, comp, cmap = out.pop(_CHANGES_LAZY)
-            out["changes"] = _stage_changes(parts, pth, comp, cmap)[0]
+            # row-level change files: materialize the staging
+            # _rewrite_commit deferred exactly once, at the publish
+            _manifest_changes(out)
         out["version"] = head + 1
         out["parent"] = head if head else None
         out["committed_at"] = time.time()
@@ -406,6 +405,13 @@ def _txn_publish(staged: dict) -> "list[str]":
     ).encode()
     if not _COMMIT_BACKEND.put_if_absent(jf, jdata):
         _discard()  # a rival writer needed one of our slots: aborted
+        # the rival's abort tombstone has done its job (this create
+        # lost, and our pendings are gone): nobody else removes it
+        if (_read_small_json(jf) or {}).get("status") == "aborted":
+            try:
+                _fs().delete(jf)
+            except Exception:
+                pass  # vacuum sweeps aged tombstones
         raise _conflict(
             coord,
             "a concurrent writer aborted the transaction at its "
@@ -2632,6 +2638,15 @@ def snapshot_write(
 _PRUNE_OPS = ("=", "<", "<=", ">", ">=", "in")
 
 
+def _session_tz(spark: SparkSession) -> str:
+    """The session's effective time zone, in which pruning compares
+    naive timestamp bounds (read with no default argument: a default
+    would be returned for an unset-but-defaulted conf). The key always
+    has a value, so a failing read is a real error: it propagates
+    rather than silently turning pruning tz-naive."""
+    return spark.conf.get("spark.sql.session.timeZone")
+
+
 def _norm_ts(bound, value, tz: "str | None"):
     """Make a stats datetime and a predicate datetime comparable.
 
@@ -3203,11 +3218,7 @@ def _dist_prune_files(
         sdf = sdf.filter(~F.col("file").isin(removed_since))
     survivors = {r["file"] for r in sdf.filter(cond).select("file").collect()}
     stats = m.get("stats", {})
-    tz = None
-    try:
-        tz = spark.conf.get("spark.sql.session.timeZone")
-    except Exception:
-        pass
+    tz = _session_tz(spark)
     for f in added:
         if all(_file_may_match(stats.get(f), c, op, v2, tz) for c, op, v2 in where):
             survivors.add(f)
@@ -3486,12 +3497,7 @@ def snapshot_read(
             # over the checkpoint stats parquet (executor-side, codegen)
             rels = _dist_prune_files(spark, path, v, m, pwhere)
         if rels is None:
-            try:  # the EFFECTIVE session tz (a `get` with a default
-                # returns the default for unset-but-defaulted confs)
-                tz = spark.conf.get("spark.sql.session.timeZone")
-            except Exception:
-                tz = None
-            rels, _ = _prune_files(m, pwhere, tz)
+            rels, _ = _prune_files(m, pwhere, _session_tz(spark))
     df = _visible_df(spark, path, m, rels)
     cond = _where_to_column(where or ())
     return df.filter(cond) if cond is not None else df
@@ -4630,10 +4636,7 @@ def snapshot_count(
     m = _read_manifest(path, v)
     where = list(where or ())
     _check_where(where)
-    try:
-        tz = spark.conf.get("spark.sql.session.timeZone")
-    except Exception:
-        tz = None
+    tz = _session_tz(spark)
     stats = m.get("stats", {})
     dv = _dv_positions(path, m.get("deletes") or []) if m.get("deletes") else {}
     candidates = m["files"]
@@ -5463,10 +5466,7 @@ def snapshot_compact(
         m = _read_manifest(path, head)
         if where:
             _check_where(where)
-            try:
-                tz = spark.conf.get("spark.sql.session.timeZone")
-            except Exception:
-                tz = None
+            tz = _session_tz(spark)
             affected, _ = _prune_files(m, _where_phys(m, where), tz)
             if not affected:
                 return head  # scope matches nothing: no-op, no commit
@@ -5545,23 +5545,13 @@ def snapshot_compact(
             # feed and CDF stream cross transparently (Delta's OPTIMIZE
             # is CDF-invisible for the same reason); the file-delta
             # faces still refuse it — rewritten files are not new rows.
-            new_files, new_stats = _stage_files(
-                out, path, "zstd", pb, m.get("bloom_ndv"),
-                column_mapping=m.get("column_mapping"),
-                stats_cols=m.get("stats_columns"),
-            )
-            car = set(carried)
-            stats = {f: s for f, s in m.get("stats", {}).items() if f in car}
-            stats.update(new_stats)
-            manifest = _cow_manifest(
-                m, head, "compact", carried + new_files, stats
-            )
             # DV retention: carried files keep their vectors, but a DV
             # file whose every entry references a rewritten (now
             # dropped) basename is dead — purge it here so scoped-
             # compact-maintained tables don't accumulate DV files
             # forever (the driver-side read is KB-scale per vector)
             dvs = m.get("deletes") or []
+            kept_dvs = None
             if dvs:
                 live = {f.rsplit("/", 1)[-1] for f in carried}
                 kept_dvs = [
@@ -5569,9 +5559,12 @@ def snapshot_compact(
                     for rel in dvs
                     if live & set(_dv_positions(path, [rel]))
                 ]
-                manifest["deletes"] = kept_dvs or None
-            if _commit_manifest(path, head + 1, manifest, m):
-                return head + 1
+            done = _rewrite_commit(
+                spark, path, m, head, "compact", out, carried, None, None,
+                tz, deletes=kept_dvs,
+            )
+            if done is not None:
+                return done[0]
             continue  # head moved: redo against the new head
         try:
             # a compact rewrites rows every prior commit already
@@ -5855,14 +5848,14 @@ def _stage_changes(
     path: str,
     compression: str,
     column_mapping: "dict | None" = None,
-) -> "list[str]":
+) -> "tuple[list[str], dict]":
     """Write this commit's row-level change records (table columns +
     ``_change_type``) as data files for the CDF feed; one file set per
     commit, referenced by the manifest's ``changes`` list. The commit
     version is NOT stored — the manifest knows it, and the feed stamps
     it at read time. Change files share the table's physical column
     names (``column_mapping``), so the CDF faces resolve them with the
-    same stable-name rule as data files."""
+    same stable-name rule as data files. Returns ``(files, stats)``."""
     tagged = _union_all([df.withColumn(_CHANGE_COL, F.lit(k)) for df, k in parts])
     if tagged is None:
         return [], {}
@@ -5879,81 +5872,105 @@ def _stage_changes(
 _CHANGES_LAZY = "__dak_changes_lazy"
 
 
-def _set_changes(
-    manifest: dict,
-    parts: "list[tuple[DataFrame, str]]",
+def _rewrite_commit(
+    spark: SparkSession,
     path: str,
-    compression: str,
-    column_mapping: "dict | None",
-) -> None:
-    """Record a DML commit's row-level change files on ``manifest``.
+    m: dict,
+    head: int,
+    op: str,
+    data: "DataFrame | None",
+    carried: "list[str]",
+    chg_parts: "list[tuple[DataFrame, str]] | None",
+    pwhere,
+    tz,
+    compression: str = "zstd",
+    deletes: "list[str] | None" = None,
+    schema: "StructType | None" = None,
+) -> "tuple[int, int, list[str], dict, list[str] | None, dict | None] | None":
+    """The commit tail every row rewrite shares (DELETE, UPDATE, MERGE,
+    scoped compaction) against head ``head`` with manifest ``m``.
 
-    Outside a transaction the files stage immediately (one Spark write
-    job). INSIDE a :class:`snapshot_txn` the staging is DEFERRED — the
+    Stages ``data`` (None: no new rows) with the table's layout and the
+    ``chg_parts`` change records (None: the commit records none) as two
+    CONCURRENT Spark jobs (guide §2.6: both derive from immutable
+    committed files or pinned checkpoints, so the change write's tasks
+    back-fill executors the data write leaves idle); the change write
+    runs on a worker thread under the caller's local properties and
+    tags (job group, scheduler pool, description). INSIDE a
+    :class:`snapshot_txn` the change staging is DEFERRED instead — the
     manifest carries the change-frame plans, not files: a multi-
     statement chain COLLAPSES at publish and drops its change files
-    entirely (and a failed script discards everything), so staging them
-    per statement is a wasted write job proportional to the changed
-    rows. The frames reference immutable already-staged data files, so
-    they evaluate identically whenever the publish (single-statement
-    chain) or an in-txn reader (:func:`_manifest_changes`) forces them."""
-    if _txn_overlay() is not None:
-        manifest[_CHANGES_LAZY] = (list(parts), path, compression, column_mapping)
-    else:
-        manifest["changes"] = _stage_changes(
-            parts, path, compression, column_mapping
-        )[0]
+    (and a failed script discards everything), so staging them per
+    statement would be a wasted write job. The frames reference
+    immutable files, so they evaluate identically whenever the publish
+    (single-statement chain) or an in-txn reader
+    (:func:`_manifest_changes`) forces them.
 
+    With ``schema`` (UPDATE, MERGE) the staged rows are checked against
+    the table's CHECK constraints; DELETE and compaction only drop or
+    move rows earlier commits validated. The manifest lists ``carried``
+    plus the staged files with their stats, and ``deletes`` replaces
+    the head's deletion-vector list (None carries it). The commit is a
+    CAS through :func:`_commit_dml`, rebasing over blind appends that
+    provably miss ``pwhere`` (None: never rebase).
 
-def _stage_data_and_changes(
-    stage_data,
-    chg_parts: "list[tuple[DataFrame, str]] | None",
-    path: str,
-    compression: str,
-    column_mapping: "dict | None",
-):
-    """Stage a DML commit's data files and its row-level change files as
-    two CONCURRENT Spark jobs (guide §2.6: actions are only sequential
-    because the driver calls them sequentially — these two are
-    independent, both deriving from immutable committed files or pinned
-    checkpoints, so the second job's tasks back-fill executors the first
-    leaves idle). ``stage_data`` is a thunk returning ``(files, stats)``
-    and runs on the calling thread; the change staging runs on a worker.
+    Returns ``(version, files carried in by rebases, staged files,
+    their stats, change files, their stats)`` — the change pair is None
+    when no change records were asked for or they were deferred — or
+    None on an unrebasable conflict: the caller re-reads the head and
+    redoes its statement, the staged files stay for vacuum."""
+    cmap = m.get("column_mapping")
 
-    Returns ``(files, stats, chg_files, chg_stats)``. ``chg_files`` is
-    None when ``chg_parts`` is None (feed off) or the commit sits inside
-    a txn overlay — the wave-1 deferral then owns change staging (the
-    overlay is thread-local, so the worker thread could not see it
-    anyway) and the caller routes through :func:`_set_changes`."""
-    if chg_parts is None or _txn_overlay() is not None:
-        files, stats = stage_data()
-        return files, stats, None, None
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    # the worker runs under the caller's local properties and tags (job
-    # group, scheduler pool, description), captured here on its thread
-    stage_changes = inheritable_thread_target(chg_parts[0][0].sparkSession)(
-        _stage_changes
-    )
-    with ThreadPoolExecutor(max_workers=1) as ex:
-        fut = ex.submit(
-            stage_changes, chg_parts, path, compression, column_mapping
+    def stage_data():
+        if data is None:
+            return [], {}
+        return _stage_files(
+            data, path, compression, m.get("partition_by"),
+            m.get("bloom_ndv"), column_mapping=cmap,
+            stats_cols=m.get("stats_columns"),
         )
-        try:
-            files, stats = stage_data()
-        except BaseException:
-            # harvest the worker before propagating: its staged files
-            # are unreferenced garbage for vacuum either way, but a
-            # still-running thread must not outlive this frame
+
+    lazy = chg_parts is not None and _txn_overlay() is not None
+    chg_files = chg_stats = None
+    if chg_parts is None or lazy:
+        # the overlay is thread-local: a worker could not see it anyway
+        files, stats = stage_data()
+    else:
+        from concurrent.futures import ThreadPoolExecutor
+
+        from pyspark import inheritable_thread_target
+
+        stage_changes = inheritable_thread_target(spark)(_stage_changes)
+        with ThreadPoolExecutor(max_workers=1) as ex:
+            fut = ex.submit(stage_changes, chg_parts, path, compression, cmap)
             try:
-                fut.result()
-            except Exception:
-                pass
-            raise
-        chg_files, chg_stats = fut.result()
-    return files, stats, chg_files, chg_stats
+                files, stats = stage_data()
+            except BaseException:
+                # harvest the worker before propagating: its staged
+                # files are unreferenced garbage for vacuum either way,
+                # but a still-running thread must not outlive this frame
+                try:
+                    fut.result()
+                except Exception:
+                    pass
+                raise
+            chg_files, chg_stats = fut.result()
+    if schema is not None:
+        _enforce_constraints(spark, m, path, files, schema=schema)
+    car = set(carried)
+    all_stats = {f: s for f, s in m.get("stats", {}).items() if f in car}
+    all_stats.update(stats)
+    manifest = _cow_manifest(m, head, op, carried + files, all_stats)
+    if deletes is not None:
+        manifest["deletes"] = deletes or None
+    if lazy:
+        manifest[_CHANGES_LAZY] = (list(chg_parts), path, compression, cmap)
+    elif chg_files is not None:
+        manifest["changes"] = chg_files
+    out = _commit_dml(path, manifest, m, pwhere, tz)
+    if out is None:
+        return None
+    return out[0], out[1], files, stats, chg_files, chg_stats
 
 
 def _manifest_changes(m: dict) -> "list | None":
@@ -6022,10 +6039,7 @@ def snapshot_delete(
         )
     _check_where(where)
     cond = _where_to_column(where)
-    try:
-        tz = spark.conf.get("spark.sql.session.timeZone")
-    except Exception:
-        tz = None
+    tz = _session_tz(spark)
     mor = strategy == "merge-on-read"
     while True:
         head = _require_versions(path)[-1]
@@ -6071,18 +6085,15 @@ def snapshot_delete(
                     "carried_files": len(m["files"]),
                     "delete_files": 0,
                 }
-            manifest = _cow_manifest(
-                m, head, "delete", list(m["files"]), dict(m.get("stats", {}))
-            )
-            manifest["deletes"] = list(m.get("deletes") or []) + dv_files
+            chg_parts = None
             if change_feed:
                 names = StructType.fromJson(json.loads(m["schema_json"])).fieldNames()
-                _set_changes(
-                    manifest,
-                    [(tagged.filter(cond).select(*names), "delete")],
-                    path, compression, m.get("column_mapping"),
-                )
-            out = _commit_dml(path, manifest, m, pwhere, tz)
+                chg_parts = [(tagged.filter(cond).select(*names), "delete")]
+            out = _rewrite_commit(
+                spark, path, m, head, "delete", None, list(m["files"]),
+                chg_parts, pwhere, tz, compression,
+                deletes=list(m.get("deletes") or []) + dv_files,
+            )
             if out is not None:
                 return {
                     "version": out[0],
@@ -6147,36 +6158,14 @@ def snapshot_delete(
             if change_feed
             else None
         )
-
-        def _data_stage():
-            if keep is None:
-                return [], {}
-            return _stage_files(
-                keep, path, compression, m.get("partition_by"),
-                m.get("bloom_ndv"), column_mapping=m.get("column_mapping"),
-                stats_cols=m.get("stats_columns"),
-            )
-
-        new_files, new_stats, chg_files, _cs = _stage_data_and_changes(
-            _data_stage, chg_parts, path, compression, m.get("column_mapping")
+        out = _rewrite_commit(
+            spark, path, m, head, "delete", keep, carried, chg_parts,
+            pwhere, tz, compression,
         )
-        # footer stats give the surviving row count for free; a file
-        # whose stats collection failed falls back to its own footer
-        after = _staged_rows(path, new_files, new_stats)
-        car = set(carried)
-        stats = {f: s for f, s in mstats.items() if f in car}
-        stats.update(new_stats)
-        manifest = _cow_manifest(m, head, "delete", carried + new_files, stats)
-        if change_feed:
-            if chg_files is not None:
-                manifest["changes"] = chg_files
-            else:
-                _set_changes(
-                    manifest, chg_parts, path, compression,
-                    m.get("column_mapping"),
-                )
-        out = _commit_dml(path, manifest, m, pwhere, tz)
         if out is not None:
+            # footer stats give the surviving row count for free; a file
+            # whose stats collection failed falls back to its own footer
+            after = _staged_rows(path, out[2], out[3])
             return {
                 "version": out[0],
                 "removed_rows": dropped_rows + before - after,
@@ -6303,10 +6292,7 @@ def snapshot_update(
         )
     _check_where(where)
     cond = _where_to_column(where)
-    try:
-        tz = spark.conf.get("spark.sql.session.timeZone")
-    except Exception:
-        tz = None
+    tz = _session_tz(spark)
     while True:
         head = _require_versions(path)[-1]
         m = _read_manifest(path, head)
@@ -6370,34 +6356,11 @@ def snapshot_update(
                 if change_feed
                 else None
             )
-
-            def _data_stage():
-                return _stage_files(
-                    patched, path, compression, m.get("partition_by"),
-                    m.get("bloom_ndv"), column_mapping=m.get("column_mapping"),
-                    stats_cols=m.get("stats_columns"),
-                )
-
-            new_files, new_stats, chg_files, _cs = _stage_data_and_changes(
-                _data_stage, chg_parts, path, compression,
-                m.get("column_mapping"),
+            out = _rewrite_commit(
+                spark, path, m, head, "update", patched, list(m["files"]),
+                chg_parts, pwhere, tz, compression,
+                deletes=list(m.get("deletes") or []) + dv_files, schema=schema,
             )
-            _enforce_constraints(spark, m, path, new_files, schema=schema)
-            stats = dict(m.get("stats", {}))
-            stats.update(new_stats)
-            manifest = _cow_manifest(
-                m, head, "update", list(m["files"]) + new_files, stats
-            )
-            manifest["deletes"] = list(m.get("deletes") or []) + dv_files
-            if change_feed:
-                if chg_files is not None:
-                    manifest["changes"] = chg_files
-                else:
-                    _set_changes(
-                        manifest, chg_parts, path, compression,
-                        m.get("column_mapping"),
-                    )
-            out = _commit_dml(path, manifest, m, pwhere, tz)
             if out is not None:
                 return {
                     "version": out[0],
@@ -6448,33 +6411,13 @@ def snapshot_update(
             if change_feed
             else None
         )
-
-        def _data_stage():
-            return _stage_files(
-                out_df, path, compression, m.get("partition_by"),
-                m.get("bloom_ndv"), column_mapping=m.get("column_mapping"),
-                stats_cols=m.get("stats_columns"),
-            )
-
-        new_files, new_stats, chg_files, chg_stats = _stage_data_and_changes(
-            _data_stage, chg_parts, path, compression, m.get("column_mapping")
+        out = _rewrite_commit(
+            spark, path, m, head, "update", out_df, carried, chg_parts,
+            pwhere, tz, compression, schema=schema,
         )
-        _enforce_constraints(spark, m, path, new_files, schema=schema)
-        stats = {f: s for f, s in m.get("stats", {}).items() if f not in aff}
-        stats.update(new_stats)
-        manifest = _cow_manifest(m, head, "update", carried + new_files, stats)
-        if change_feed:
-            if chg_files is not None:
-                manifest["changes"] = chg_files
-            else:
-                _set_changes(
-                    manifest, chg_parts, path, compression,
-                    m.get("column_mapping"),
-                )
-        if updated_rows is None:
-            updated_rows = _staged_rows(path, chg_files, chg_stats) // 2
-        out = _commit_dml(path, manifest, m, pwhere, tz)
         if out is not None:
+            if updated_rows is None:
+                updated_rows = _staged_rows(path, out[4], out[5]) // 2
             return {
                 "version": out[0],
                 "updated_rows": updated_rows,
@@ -6483,6 +6426,112 @@ def snapshot_update(
             }
         # unrebasable conflict: re-read and redo; staged files stay
         # for vacuum
+
+
+def _merge_clauses(clauses, on: "list[str]", family: str) -> "list[tuple]":
+    """Validate a MERGE clause list ``[(condition, action,
+    assignments)]`` of ``family`` (``when_matched`` or
+    ``when_not_matched_by_source``). A matched update may take None
+    for the whole source row; a not-matched-by-source update has no
+    source row to copy, so it needs an explicit dict."""
+    if not clauses:
+        raise ValueError(f"{family} clause list is empty")
+    whole_row = family == "when_matched"
+    out = []
+    for i, cl in enumerate(clauses):
+        if not (isinstance(cl, (list, tuple)) and len(cl) == 3):
+            raise ValueError(
+                f"each {family} clause is a (condition, action, "
+                f"assignments) triple, got {cl!r}"
+            )
+        cond, action, assigns = cl
+        if action not in ("update", "delete"):
+            raise ValueError(f"clause action must be update|delete, got {action!r}")
+        if action == "delete" and assigns is not None:
+            raise ValueError("a delete clause takes no assignments")
+        if action == "update" and (assigns is not None or not whole_row):
+            if not isinstance(assigns, dict) or not assigns:
+                raise ValueError(
+                    "update assignments must be a non-empty dict "
+                    "(or None for the whole source row)"
+                    if whole_row
+                    else "a when_not_matched_by_source update needs an "
+                    "explicit non-empty assignments dict (there is no "
+                    "source row to copy)"
+                )
+            bad_keys = sorted(set(assigns) & set(on))
+            if bad_keys:
+                raise ValueError(f"may not assign merge key columns {bad_keys}")
+        if cond is None and i != len(clauses) - 1:
+            raise ValueError(
+                f"only the LAST {family} clause may omit its condition "
+                f"(clause {i} makes later ones unreachable)"
+            )
+        out.append((cond, action, assigns))
+    return out
+
+
+def _first_match_index(clauses: "list[tuple]") -> Column:
+    """Index of the FIRST clause whose condition holds, -1 when none
+    does (F.when short-circuits in order; a NULL condition never
+    matches, a None condition always does)."""
+    ci = None
+    for i, (cond, _a, _g) in enumerate(clauses):
+        cc = (
+            F.lit(True)
+            if cond is None
+            else (F.expr(cond) if isinstance(cond, str) else cond)
+        )
+        ci = F.when(cc, F.lit(i)) if ci is None else ci.when(cc, F.lit(i))
+    return ci.otherwise(F.lit(-1))
+
+
+def _clause_projection(
+    clauses: "list[tuple]", idx_col: str, schema: StructType
+) -> "list[Column]":
+    """Every table column of a clause eval frame's output row: the
+    assignment of the update clause ``idx_col`` picked (None
+    assignments copy the source struct ``s``), else the target struct
+    ``t``'s value, cast to the column's type."""
+    out = []
+    for f in schema.fields:
+        val = None
+        for i, (_c, action, assigns) in enumerate(clauses):
+            if action != "update":
+                continue
+            if assigns is None:
+                v = F.col("s").getField(f.name)
+            elif f.name in assigns:
+                a = assigns[f.name]
+                v = F.expr(a) if isinstance(a, str) else a
+            else:
+                continue  # this clause leaves the column unchanged
+            hit = F.col(idx_col) == i
+            val = F.when(hit, v) if val is None else val.when(hit, v)
+        expr = F.col("t").getField(f.name)
+        if val is not None:
+            expr = val.otherwise(expr)
+        out.append(expr.cast(f.dataType).alias(f.name))
+    return out
+
+
+def _upcast_to_table(src: DataFrame, schema: StructType, mismatch) -> DataFrame:
+    """``src`` with each column the table also has cast to the table's
+    type where the widening lattice makes that lossless (Delta's
+    implicit MERGE upcast); other columns pass unchanged. Any other
+    type drift raises ``mismatch(column, source type, table type)``."""
+    table_t = {f.name: f.dataType.simpleString() for f in schema.fields}
+    casts = []
+    for f in src.schema.fields:
+        t = table_t.get(f.name)
+        s = f.dataType.simpleString()
+        if t is None or s == t:
+            casts.append(F.col(f.name))
+        elif _widened(s, t) == t:
+            casts.append(F.col(f.name).cast(t).alias(f.name))
+        else:
+            raise ValueError(mismatch(f.name, s, t))
+    return src.select(*casts)
 
 
 def snapshot_merge(
@@ -6592,38 +6641,7 @@ def snapshot_merge(
     clause_mode = isinstance(when_matched, (list, tuple))
     clauses: "list[tuple]" = []
     if clause_mode:
-        if not when_matched:
-            raise ValueError("when_matched clause list is empty")
-        for i, cl in enumerate(when_matched):
-            if not (isinstance(cl, (list, tuple)) and len(cl) == 3):
-                raise ValueError(
-                    "each when_matched clause is a (condition, action, "
-                    f"assignments) triple, got {cl!r}"
-                )
-            cond, action, assigns = cl
-            if action not in ("update", "delete"):
-                raise ValueError(
-                    f"clause action must be update|delete, got {action!r}"
-                )
-            if action == "delete" and assigns is not None:
-                raise ValueError("a delete clause takes no assignments")
-            if action == "update" and assigns is not None:
-                if not isinstance(assigns, dict) or not assigns:
-                    raise ValueError(
-                        "update assignments must be a non-empty dict "
-                        "(or None for the whole source row)"
-                    )
-                bad_keys = sorted(set(assigns) & set(on))
-                if bad_keys:
-                    raise ValueError(
-                        f"may not assign merge key columns {bad_keys}"
-                    )
-            if cond is None and i != len(when_matched) - 1:
-                raise ValueError(
-                    "only the LAST when_matched clause may omit its "
-                    f"condition (clause {i} makes later ones unreachable)"
-                )
-            clauses.append((cond, action, assigns))
+        clauses = _merge_clauses(when_matched, on, "when_matched")
     elif when_matched not in ("update", "delete", None):
         raise ValueError(f"when_matched must be update|delete|None, got {when_matched!r}")
     nm_cond, nm_assigns = None, None
@@ -6670,42 +6688,9 @@ def snapshot_merge(
         if when_not_matched_by_source == "delete":
             nms_clauses = [(None, "delete", None)]
         elif isinstance(when_not_matched_by_source, (list, tuple)):
-            if not when_not_matched_by_source:
-                raise ValueError("when_not_matched_by_source clause list is empty")
-            for i, cl in enumerate(when_not_matched_by_source):
-                if not (isinstance(cl, (list, tuple)) and len(cl) == 3):
-                    raise ValueError(
-                        "each when_not_matched_by_source clause is a "
-                        f"(condition, action, assignments) triple, got {cl!r}"
-                    )
-                cond, action, assigns = cl
-                if action not in ("update", "delete"):
-                    raise ValueError(
-                        f"clause action must be update|delete, got {action!r}"
-                    )
-                if action == "delete" and assigns is not None:
-                    raise ValueError("a delete clause takes no assignments")
-                if action == "update":
-                    # no source row exists for these target rows, so
-                    # "whole source row" (None) has nothing to copy
-                    if not isinstance(assigns, dict) or not assigns:
-                        raise ValueError(
-                            "a when_not_matched_by_source update needs an "
-                            "explicit non-empty assignments dict (there is "
-                            "no source row to copy)"
-                        )
-                    bad_keys = sorted(set(assigns) & set(on))
-                    if bad_keys:
-                        raise ValueError(
-                            f"may not assign merge key columns {bad_keys}"
-                        )
-                if cond is None and i != len(when_not_matched_by_source) - 1:
-                    raise ValueError(
-                        "only the LAST when_not_matched_by_source clause may "
-                        f"omit its condition (clause {i} makes later ones "
-                        "unreachable)"
-                    )
-                nms_clauses.append((cond, action, assigns))
+            nms_clauses = _merge_clauses(
+                when_not_matched_by_source, on, "when_not_matched_by_source"
+            )
         else:
             raise ValueError(
                 "when_not_matched_by_source must be 'delete', a clause "
@@ -6821,22 +6806,11 @@ def snapshot_merge(
         src_missing = sorted(set(names if need_full else on) - set(source.columns))
         if src_missing:
             raise ValueError(f"source is missing columns {src_missing}")
-        table_t = {f.name: f.dataType.simpleString() for f in schema.fields}
-        casts = []
-        for f in source.schema.fields:
-            t = table_t.get(f.name)
-            sstr = f.dataType.simpleString()
-            if t is None or sstr == t:
-                casts.append(F.col(f.name))
-            elif _widened(sstr, t) == t:
-                casts.append(F.col(f.name).cast(t).alias(f.name))
-            else:
-                raise ValueError(
-                    f"merge schema mismatch: source column {f.name!r} is "
-                    f"{sstr}, which does not losslessly upcast to the "
-                    f"table's {t}"
-                )
-        src = source.select(*casts)
+        src = _upcast_to_table(
+            source, schema,
+            lambda c, s, t: f"merge schema mismatch: source column {c!r} "
+            f"is {s}, which does not losslessly upcast to the table's {t}",
+        )
     else:
         src_missing = sorted(set(names if need_full else on) - set(source.columns))
         if src_missing:
@@ -6853,23 +6827,12 @@ def snapshot_merge(
         # lattice) is cast implicitly, Delta's merge behavior; any
         # other drift (narrowing, lossy, renames) is refused like an
         # append's
-        table_t = {f.name: f.dataType.simpleString() for f in schema.fields}
-        casts = []
-        for f in src.schema.fields:
-            t = table_t[f.name]
-            s = f.dataType.simpleString()
-            if s == t:
-                casts.append(F.col(f.name))
-            elif _widened(s, t) == t:
-                casts.append(F.col(f.name).cast(t).alias(f.name))
-            else:
-                raise ValueError(
-                    f"merge schema mismatch: table has "
-                    f"{schema.simpleString()}, source has "
-                    f"{src.schema.simpleString()} (column {f.name!r}: "
-                    f"{s} does not losslessly upcast to {t})"
-                )
-        src = src.select(*casts)
+        src = _upcast_to_table(
+            src, schema,
+            lambda c, s, t: f"merge schema mismatch: table has "
+            f"{schema.simpleString()}, source has {src.schema.simpleString()} "
+            f"(column {c!r}: {s} does not losslessly upcast to {t})",
+        )
     src = src.localCheckpoint(eager=True)
     keys_ok = None
     for k in on:
@@ -6882,10 +6845,7 @@ def snapshot_merge(
         *[F.min(k).alias(f"mn_{i}") for i, k in enumerate(on)],
         *[F.max(k).alias(f"mx_{i}") for i, k in enumerate(on)],
     ).first()
-    try:
-        tz = spark.conf.get("spark.sql.session.timeZone")
-    except Exception:
-        tz = None
+    tz = _session_tz(spark)
 
     def _bound(v, k):
         # .first() hands TIMESTAMP (LTZ) values back as naive datetimes
@@ -7010,41 +6970,13 @@ def snapshot_merge(
                     tgt_out.select(*names).withColumn("__dak_out", F.lit(True))
                 )
             )
-            nci = None
-            for i, (cond, _a, _g) in enumerate(nms_clauses):
-                cc = (
-                    F.lit(True)
-                    if cond is None
-                    else (F.expr(cond) if isinstance(cond, str) else cond)
-                )
-                nci = F.when(cc, F.lit(i)) if nci is None else nci.when(cc, F.lit(i))
             nmf = nm_all.select(
                 F.struct(*[F.col(c).alias(c) for c in names]).alias("t"),
                 "__dak_out",
-            ).withColumn("__dak_nci", nci.otherwise(F.lit(-1)))
-            nm_dt = {f.name: f.dataType for f in schema.fields}
-            nm_cols = []
-            for c in names:
-                val = None
-                for i in nm_upd_idx:
-                    assigns = nms_clauses[i][2]
-                    if c not in assigns:
-                        continue  # this clause leaves c unchanged
-                    a = assigns[c]
-                    v = F.expr(a) if isinstance(a, str) else a
-                    val = (
-                        F.when(F.col("__dak_nci") == i, v)
-                        if val is None
-                        else val.when(F.col("__dak_nci") == i, v)
-                    )
-                expr = (
-                    val.otherwise(F.col("t").getField(c))
-                    if val is not None
-                    else F.col("t").getField(c)
-                )
-                nm_cols.append(expr.cast(nm_dt[c]).alias(c))
+            ).withColumn("__dak_nci", _first_match_index(nms_clauses))
             nm_frame = nmf.select(
-                "__dak_out", "__dak_nci", F.col("t").alias("__dak_t"), *nm_cols
+                "__dak_out", "__dak_nci", F.col("t").alias("__dak_t"),
+                *_clause_projection(nms_clauses, "__dak_nci", schema),
             )
             # phase 1: the region gate — one aggregation, nothing pinned
             cnt_gate = {
@@ -7117,46 +7049,15 @@ def snapshot_merge(
             for k in on:
                 e = tga[k] == sra[k]
                 jc = e if jc is None else (jc & e)
-            ci = None
-            for i, (cond, _a, _g) in enumerate(clauses):
-                cc = (
-                    F.lit(True)
-                    if cond is None
-                    else (F.expr(cond) if isinstance(cond, str) else cond)
-                )
-                ci = F.when(cc, F.lit(i)) if ci is None else ci.when(cc, F.lit(i))
             joined = (
                 tga.join(sra, jc, "inner")
                 .select(
                     F.struct(*[tga[c].alias(c) for c in names]).alias("t"),
                     F.struct(*[sra[c].alias(c) for c in src.columns]).alias("s"),
                 )
-                .withColumn("__dak_ci", ci.otherwise(F.lit(-1)))
+                .withColumn("__dak_ci", _first_match_index(clauses))
             )
-            table_dt = {f.name: f.dataType for f in schema.fields}
-            out_cols = []
-            for c in names:
-                val = None
-                for i in upd_idx:
-                    assigns = clauses[i][2]
-                    if assigns is None:
-                        v = F.col("s").getField(c)
-                    elif c in assigns:
-                        a = assigns[c]
-                        v = F.expr(a) if isinstance(a, str) else a
-                    else:
-                        continue  # this clause leaves c unchanged
-                    val = (
-                        F.when(F.col("__dak_ci") == i, v)
-                        if val is None
-                        else val.when(F.col("__dak_ci") == i, v)
-                    )
-                expr = (
-                    val.otherwise(F.col("t").getField(c))
-                    if val is not None
-                    else F.col("t").getField(c)
-                )
-                out_cols.append(expr.cast(table_dt[c]).alias(c))
+            out_cols = _clause_projection(clauses, "__dak_ci", schema)
             # ONE materialization pins conditions AND assignment
             # expressions: the counts, the rewritten rows, and the CDF
             # pre/postimages all derive from this frame, so a
@@ -7331,43 +7232,21 @@ def snapshot_merge(
                     )
             if inserted:
                 chg.append((ins.select(*names), "insert"))
-
-        def _data_stage():
-            return _stage_files(
-                out, path, compression, m.get("partition_by"),
-                m.get("bloom_ndv"), column_mapping=m.get("column_mapping"),
-                stats_cols=m.get("stats_columns"),
-            )
-
-        new_files, new_stats, chg_files, _cs = _stage_data_and_changes(
-            _data_stage, chg, path, compression, m.get("column_mapping")
-        )
-        _enforce_constraints(spark, m, path, new_files, schema=schema)
-        stats = {f: s for f, s in m.get("stats", {}).items() if f not in set(rewritten)}
-        stats.update(new_stats)
-        # an insert-only merge never rewrites a file — the file set
-        # strictly grows, which IS an append: stamping it so keeps
-        # snapshot_changes / stream_from_snapshot working across
-        # upsert-maintained tables instead of hard-failing the feed
-        manifest = _cow_manifest(
-            m, head, "merge" if rewritten else "append", carried + new_files, stats
-        )
-        if chg is not None:
-            if chg_files is not None:
-                manifest["changes"] = chg_files
-            else:
-                _set_changes(
-                    manifest, chg, path, compression, m.get("column_mapping")
-                )
-        out = _commit_dml(
-            path, manifest, m,
+        out = _rewrite_commit(
+            spark, path, m, head,
+            # an insert-only merge never rewrites a file — the file set
+            # strictly grows, which IS an append: stamping it so keeps
+            # snapshot_changes / stream_from_snapshot working across
+            # upsert-maintained tables instead of hard-failing the feed
+            "merge" if rewritten else "append",
+            out, carried, chg,
             # a concurrent blind append adds rows the third clause family
             # would have had to touch — with it active there is NO sound
             # rebase predicate, so pass None (= restage on conflict)
             None if nms_clauses else (
                 _where_phys(m, where) if where is not None else None
             ),
-            tz,
+            tz, compression, schema=schema,
         )
         if out is not None:
             return {
@@ -8140,11 +8019,7 @@ def from_snapshot(
         .option("path", path)
         .option("version", str(v))
     )
-    try:
-        r = r.option("tz", spark.conf.get("spark.sql.session.timeZone"))
-    except Exception:
-        pass
-    return r.load()
+    return r.option("tz", _session_tz(spark)).load()
 
 
 def snapshot_vacuum(

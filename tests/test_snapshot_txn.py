@@ -620,6 +620,50 @@ def test_multi_table_crash_before_journal_discards_all(
     assert glob.glob(os.path.join(pb, "_manifests", ".tmp-pending-*")) == []
 
 
+def test_multi_table_rival_abort_leaves_no_journal(
+    spark, tmp_path, monkeypatch
+):
+    """A rival commit that finds the transaction's pending slot before
+    the journal exists claims the decision with an ``aborted`` journal;
+    the coordinator then loses its journal create and conflicts — and
+    removes that tombstone, so no journal outlives the transaction."""
+    import dask_awkward_spark.sources.snapshot as snap_mod
+
+    pa, pb = str(tmp_path / "a"), str(tmp_path / "b")
+    snapshot_write(spark.range(5), pa)
+    snapshot_write(spark.range(7), pb)
+    slot = _versions(pa)[-1] + 1
+    fired = []
+
+    class _RivalBeforeJournal:
+        def __init__(self, inner):
+            self.inner = inner
+
+        def put_if_absent(self, final, data):
+            if os.path.basename(final).startswith("txn-journal-") and not fired:
+                fired.append(final)
+                snap_mod._txn_block_or_help(pa, slot)  # the rival's probe
+            return self.inner.put_if_absent(final, data)
+
+        def __getattr__(self, k):
+            return getattr(self.inner, k)
+
+    monkeypatch.setattr(
+        snap_mod, "_COMMIT_BACKEND", _RivalBeforeJournal(snap_mod._COMMIT_BACKEND)
+    )
+    with pytest.raises(SnapshotConflictError, match="aborted the transaction"):
+        with snapshot_txn():
+            snapshot_write(spark.range(5, 10), pa, mode="append")
+            snapshot_write(spark.range(7, 14), pb, mode="append")
+    monkeypatch.undo()
+    assert fired
+    assert snapshot_read(spark, pa).count() == 5
+    assert snapshot_read(spark, pb).count() == 7
+    for p in (pa, pb):
+        assert glob.glob(os.path.join(p, "_manifests", "txn-journal-*")) == []
+        assert glob.glob(os.path.join(p, "_manifests", ".tmp-pending-*")) == []
+
+
 def test_multi_table_crash_then_rival_writer_completes(
     spark, tmp_path, monkeypatch
 ):
