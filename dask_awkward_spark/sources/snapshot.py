@@ -5935,6 +5935,10 @@ def _rewrite_commit(
     if chg_parts is None or lazy:
         # the overlay is thread-local: a worker could not see it anyway
         files, stats = stage_data()
+    elif data is None:
+        # no data write to overlap: stage the changes on this thread
+        files, stats = [], {}
+        chg_files, chg_stats = _stage_changes(chg_parts, path, compression, cmap)
     else:
         from concurrent.futures import ThreadPoolExecutor
 
