@@ -4,9 +4,15 @@ Spark-native re-expression of the reference's collection classes
 (dask_awkward lib/core.py:921 ``Array``, :751 ``Record``, :356 ``Scalar``).
 Where the reference builds Dask task graphs and simulates schemas with
 typetracers, we hold a base ``pyspark.sql.DataFrame`` plus a Column
-expression — Catalyst's analyzer propagates the schema for free and the
-optimizer (column pruning, pushdown, codegen) replaces the reference's
-custom optimize pass (lib/optimize.py).
+expression, and the optimizer (column pruning, pushdown, codegen)
+replaces the reference's custom optimize pass (lib/optimize.py).
+
+Types are known without touching data, as the reference's typetracer
+``_meta`` knows them: constructors that know their output type (a
+parquet scan's root, a field projection, a row-level per-list reducer)
+seed it from the type rules in ``schema.py``; any other collection asks
+Catalyst's analyzer once, on first use of ``dtype`` — a driver round trip
+over py4j, which the seeded types skip.
 
 A ``NestedArray`` is a partitioned, lazy collection of (possibly deeply
 nested) values: one outer element per DataFrame row, nested levels as
@@ -23,7 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .schema import apply_at_depth, broadcast_binop, list_depth
+from .schema import apply_at_depth, broadcast_binop, field_type, list_depth
 from .session import local_frame
 
 VALUE_COL = "v"
@@ -68,8 +74,15 @@ def _ak_typestr(dt: T.DataType) -> str:
 
 
 def _project_through_lists(col: Column, dt: T.DataType, name: str) -> Column:
-    """Project a struct field through any number of list levels."""
-    if isinstance(dt, T.ArrayType):
+    """Project a struct field through any number of list levels.
+
+    At an ``array<struct>`` level ``col[name]`` resolves to Spark's native
+    ``GetArrayStructFields`` (generated code, no lambda to build or
+    interpret per element); ``F.transform`` wraps only the list levels
+    above it. Null lists, null struct elements and result nullability are
+    those of the ``transform(x -> x.name)`` spelling, and so is the error
+    for a missing field."""
+    if isinstance(dt, T.ArrayType) and not isinstance(dt.elementType, T.StructType):
         return F.transform(col, lambda x: _project_through_lists(x, dt.elementType, name))
     return col[name]
 
@@ -240,8 +253,10 @@ class NestedArray:
     # ---------------- metadata (the typetracer analogue) ----------------
     @property
     def dtype(self) -> T.DataType:
-        """Output type, resolved by Catalyst's analyzer (no data touched) —
-        the role the typetracer meta plays in the reference (lib/core.py:2698)."""
+        """Output type, known without touching data — the role the
+        typetracer meta plays in the reference (lib/core.py:2698). A type
+        its constructor seeded comes first; otherwise Catalyst's analyzer
+        resolves it once (one driver round trip) and it is kept."""
         if self._dtype is None:
             self._dtype = self._df.select(self._col.alias(VALUE_COL)).schema[0].dataType
         return self._dtype
@@ -304,7 +319,9 @@ class NestedArray:
     def __getitem__(self, key: Any) -> "NestedArray | Record":
         # field projection: arr["x"], possibly through list levels
         if isinstance(key, str):
-            return self._wrap(self._project_field(key))
+            out = self._wrap(self._project_field(key))
+            out._dtype = field_type(self.dtype, key)
+            return out
         # multi-field: arr[["a","b"]] -> struct of the selected fields
         if isinstance(key, list) and key and all(isinstance(k, str) for k in key):
             dt = self.dtype

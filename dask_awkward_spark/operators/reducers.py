@@ -26,7 +26,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..core import VALUE_COL, NestedArray, Scalar, align_many
-from ..schema import apply_at_depth, apply_at_depth2, bind, element_type, normalize_axis
+from ..schema import (
+    apply_at_depth,
+    apply_at_depth2,
+    bind,
+    element_type,
+    list_reduce_type,
+    normalize_axis,
+)
 
 
 def _leaf_type(arr: NestedArray) -> T.DataType:
@@ -312,13 +319,17 @@ def _reduce(
             )
         )
     # innermost list: apply the leaf reducer beneath ax-1 transform levels
-    return arr._wrap(
+    out = arr._wrap(
         apply_at_depth(
             arr._col,
             ax - 1,
             lambda c: _finish_leaf(leaf(c, dt), c, dt, op, keepdims, mask_identity),
         )
     )
+    if depth == 1 and not keepdims and mask_identity is None:
+        # a row-level leaf: its type has no nested nullability to guess
+        out._dtype = list_reduce_type(op, dt)
+    return out
 
 
 def _axis0_positional(arr: NestedArray, op: str) -> NestedArray:

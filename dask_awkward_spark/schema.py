@@ -41,6 +41,61 @@ def element_type(dt: T.DataType, levels: int = 1) -> T.DataType:
     return dt
 
 
+def field_type(dt: T.DataType, name: str) -> "T.DataType | None":
+    """Type of field ``name`` projected through the list levels of ``dt``,
+    by Spark's ``GetStructField`` / ``GetArrayStructFields`` type rules
+    (the lambda-variable and native spellings type alike): a struct gives
+    the field's type, an ``array<struct>`` gives ``array<field>`` whose
+    ``containsNull`` is the array's or the field's nullability, and each
+    outer list keeps its own ``containsNull``.
+
+    None unless ``name`` is one field's exact name and no other field
+    matches it case-insensitively; the analyzer then resolves (or raises)
+    instead."""
+    if isinstance(dt, T.ArrayType):
+        inner = field_type(dt.elementType, name)
+        if inner is None:
+            return None
+        if isinstance(dt.elementType, T.StructType):
+            nullable = dt.elementType[name].nullable
+            return T.ArrayType(inner, dt.containsNull or nullable)
+        return T.ArrayType(inner, dt.containsNull)
+    if not isinstance(dt, T.StructType):
+        return None
+    hits = [f for f in dt.fields if f.name.lower() == name.lower()]
+    if len(hits) != 1 or hits[0].name != name:
+        return None
+    return hits[0].dataType
+
+
+#: result type of a per-list reducer whatever the (numeric) leaf type
+_LIST_REDUCE_TYPES = {
+    "count": T.LongType(),
+    "count_nonzero": T.LongType(),
+    "any": T.BooleanType(),
+    "all": T.BooleanType(),
+    "mean": T.DoubleType(),
+    "var": T.DoubleType(),
+    "std": T.DoubleType(),
+}
+
+
+def list_reduce_type(op: str, leaf: T.DataType) -> "T.DataType | None":
+    """Type of reducer ``op`` applied to one list of ``leaf`` values (the
+    operators.reducers leaf expressions): min/max keep the leaf type,
+    sum/prod accumulate in double for fractional and decimal leaves and
+    in bigint otherwise. None for a non-numeric leaf or an op without a
+    rule here."""
+    if not isinstance(leaf, T.NumericType):
+        return None
+    if op in ("min", "max"):
+        return leaf
+    if op in ("sum", "prod"):
+        frac = isinstance(leaf, (T.DoubleType, T.FloatType, T.DecimalType))
+        return T.DoubleType() if frac else T.LongType()
+    return _LIST_REDUCE_TYPES.get(op)
+
+
 def normalize_axis(axis: int, depth: int) -> int:
     """Resolve negative axis against the list depth; validate range.
 

@@ -246,9 +246,10 @@ def read_hot(spark: SparkSession, path: str) -> "DataFrame":
     real scale (many files / many row groups) the guard never fires
     because the scan already yields >= parallelism splits.
     """
+    from .sources.parquet import _read_parquet
     from .sources.tables import scan_partitions_estimate
 
-    df = spark.read.parquet(path)
+    df = _read_parquet(spark, [path])
     target = spark.sparkContext.defaultParallelism
     est = scan_partitions_estimate(
         spark, path, fallback=lambda: df.rdd.getNumPartitions()

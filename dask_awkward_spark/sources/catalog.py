@@ -197,12 +197,15 @@ def _pyarrow_entries(catalog_path: str, head: int) -> "list[dict] | None":
     reader can't honor — deletion vectors, a column mapping, an
     unexpected schema — and the Spark read path answers instead.
     Name-sorting parity: Python sorts str by code point, which equals
-    the UTF-8 byte order Spark's UTF8String sort uses."""
+    the UTF-8 byte order Spark's UTF8String sort uses. Files are read
+    through the storage backend (``_fs()``); a file gone in a race, an
+    unreadable file or a manifest without ``files`` also answer None."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from .snapshot import _fs, _read_manifest
+
     try:
-        import pyarrow.parquet as pq
-
-        from .snapshot import _read_manifest
-
         m = _read_manifest(catalog_path, head)
         if m.get("deletes") or (m.get("column_mapping") or {}).get(
             "physical"
@@ -210,16 +213,15 @@ def _pyarrow_entries(catalog_path: str, head: int) -> "list[dict] | None":
             return None
         rows: "list[dict]" = []
         for rel in m["files"]:
-            rows.extend(
-                pq.read_table(os.path.join(catalog_path, rel)).to_pylist()
-            )
-        want = {"name", "path", "pin_version", "pin_tag", "registered_at"}
-        if rows and set(rows[0]) != want:
-            return None
-        rows.sort(key=lambda r: r["name"])
-        return rows
-    except Exception:
+            data = _fs().read_bytes(os.path.join(catalog_path, rel))
+            rows.extend(pq.read_table(pa.BufferReader(data)).to_pylist())
+    except (OSError, pa.ArrowInvalid, KeyError):
         return None
+    want = {"name", "path", "pin_version", "pin_tag", "registered_at"}
+    if rows and set(rows[0]) != want:
+        return None
+    rows.sort(key=lambda r: r["name"])
+    return rows
 
 
 def snapshot_catalog_list(spark: SparkSession, catalog_path: str) -> "list[dict]":

@@ -22,6 +22,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .parquet import _read_parquet
+
 
 def _ensure_session_conf(spark: SparkSession) -> None:
     # runtime-settable guards: make events readable/comparable even when the
@@ -51,7 +53,7 @@ def _normalize_ts(df: DataFrame, col: str = "ts") -> DataFrame:
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch read of ``events.parquet`` with ``ts`` normalized to NTZ."""
     _ensure_session_conf(spark)
-    return _normalize_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    return _normalize_ts(_read_parquet(spark, [f"{sf_dir}/events.parquet"]))
 
 
 def events_ingest_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
@@ -62,7 +64,7 @@ def events_ingest_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
     instead of a hard-coded guess (the round-3 silent-corruption bug).
     """
     _ensure_session_conf(spark)
-    return spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    return _read_parquet(spark, [f"{sf_dir}/events.parquet"]).schema
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:

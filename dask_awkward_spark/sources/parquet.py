@@ -97,6 +97,27 @@ def _listing_signature(spark: SparkSession, paths: "list[str]") -> "tuple | None
     return (spark.sparkContext.applicationId, confs, tuple(sorted(files)))
 
 
+def _read_parquet(spark: SparkSession, paths: "list[str]") -> DataFrame:
+    """``spark.read.parquet(*paths)``, with the inferred schema of a
+    keyed listing (see :func:`from_parquet`) remembered so a repeated
+    read of unchanged files runs no inference job."""
+    sig = _listing_signature(spark, paths)
+    with _SCHEMA_LOCK:
+        schema = _SCHEMA_CACHE.get(sig) if sig is not None else None
+        if schema is not None:
+            _SCHEMA_CACHE.move_to_end(sig)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(*paths)
+    df = spark.read.parquet(*paths)
+    # cache only when the files did not move under the inference
+    if sig is not None and _listing_signature(spark, paths) == sig:
+        with _SCHEMA_LOCK:
+            _SCHEMA_CACHE[sig] = df.schema
+            while len(_SCHEMA_CACHE) > _SCHEMA_CACHE_SIZE:
+                _SCHEMA_CACHE.popitem(last=False)
+    return df
+
+
 def from_parquet(
     spark: SparkSession,
     path: str | list[str],
@@ -122,25 +143,14 @@ def from_parquet(
     (relative, object stores, HDFS, globs) infers on every call, as
     before.
     """
-    paths = path if isinstance(path, list) else [path]
-    sig = _listing_signature(spark, paths)
-    with _SCHEMA_LOCK:
-        schema = _SCHEMA_CACHE.get(sig) if sig is not None else None
-        if schema is not None:
-            _SCHEMA_CACHE.move_to_end(sig)
-    if schema is not None:
-        df = spark.read.schema(schema).parquet(*paths)
-    else:
-        df = spark.read.parquet(*paths)
-        # cache only when the files did not move under the inference
-        if sig is not None and _listing_signature(spark, paths) == sig:
-            with _SCHEMA_LOCK:
-                _SCHEMA_CACHE[sig] = df.schema
-                while len(_SCHEMA_CACHE) > _SCHEMA_CACHE_SIZE:
-                    _SCHEMA_CACHE.popitem(last=False)
+    df = _read_parquet(spark, path if isinstance(path, list) else [path])
     if columns is not None:
         df = df.select(*columns)
     arr = NestedArray(df, F.struct(*[F.col(c) for c in df.columns]))
+    names = [c.lower() for c in df.columns]
+    if len(set(names)) == len(names) and not any("." in n or "`" in n for n in names):
+        # the struct of the scan's columns has exactly their fields
+        arr._dtype = StructType(df.schema.fields)
     if report:
         rep = (
             df.groupBy(F.input_file_name().alias("file"))

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .events import _ensure_session_conf, _normalize_ts
+from .parquet import _read_parquet
 
 # Spark-side contract for each table: (name, simpleString type) in order.
 CANONICAL: dict[str, tuple[tuple[str, str], ...]] = {
@@ -165,7 +166,7 @@ def normalize_table(df: DataFrame, name: str) -> DataFrame:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read ``{sf_dir}/{name}.parquet`` normalized to the canonical schema."""
     _ensure_session_conf(spark)  # nanosAsLong + UTC, settable at runtime
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, [f"{sf_dir}/{name}.parquet"])
     if name == "events":
         # events keeps its dedicated path (streaming variant shares it)
         return normalize_table(_normalize_ts(df), name)
@@ -294,7 +295,7 @@ def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     instant-typed timestamp).
     """
     _ensure_session_conf(spark)
-    ingest_schema = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+    ingest_schema = _read_parquet(spark, [f"{sf_dir}/{name}.parquet"]).schema
     raw = (
         spark.readStream.schema(ingest_schema)
         .format("parquet")

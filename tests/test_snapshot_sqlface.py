@@ -6,6 +6,7 @@ commit machinery, and a catalog name is all a consumer needs."""
 from __future__ import annotations
 
 import datetime
+import os
 
 import pytest
 
@@ -227,6 +228,44 @@ def test_catalog_roundtrip_and_views(spark, tmp_path):
     assert snapshot_catalog_tables(spark, cat) == {}
     with pytest.raises(KeyError):
         snapshot_catalog_lookup(spark, cat, "t")
+
+
+class _CountingReads:
+    """Delegates to a storage backend, recording every ``read_bytes``."""
+
+    def __init__(self, inner):
+        self.inner = inner
+        self.reads: "list[str]" = []
+
+    def read_bytes(self, path):
+        self.reads.append(path)
+        return self.inner.read_bytes(path)
+
+    def __getattr__(self, name):
+        return getattr(self.inner, name)
+
+
+def test_catalog_fast_read_goes_through_storage_backend(spark, tmp_path):
+    """The driver-side catalog listing reads each data file once through
+    the storage backend, so an object-store port serves it too."""
+    from dask_awkward_spark.sources.catalog import _pyarrow_entries
+    from dask_awkward_spark.sources.snapshot import _read_manifest, _versions
+    from dask_awkward_spark.sources.storage import active, set_storage_backend
+
+    p = _tbl(spark, tmp_path)
+    cat = str(tmp_path / "cat")
+    snapshot_catalog_register(spark, cat, "t", p)
+    snapshot_catalog_register(spark, cat, "u", p, version=1)
+    head = _versions(cat)[-1]
+    files = [os.path.join(cat, f) for f in _read_manifest(cat, head)["files"]]
+    counting = _CountingReads(active())
+    prev = set_storage_backend(counting)
+    try:
+        rows = _pyarrow_entries(cat, head)
+    finally:
+        set_storage_backend(prev)
+    assert [r["name"] for r in rows] == ["t", "u"]
+    assert sorted(r for r in counting.reads if r in files) == sorted(files)
 
 
 def test_catalog_tag_pin_survives_vacuum(spark, tmp_path):

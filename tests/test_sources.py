@@ -838,3 +838,41 @@ def test_from_parquet_schema_cache_threads(spark, tmp_path, monkeypatch):
     assert not any(t.is_alive() for t in threads)
     assert not errors and not wrong, (errors, wrong)
     assert len(sp._SCHEMA_CACHE) <= 2
+
+
+def test_testdata_loaders_warm_read_runs_no_job(spark):
+    """The testdata loaders read through from_parquet's schema cache: a
+    warm read of an unchanged file starts no Spark job and gets the
+    schema plain inference gives."""
+    from dask_awkward_spark.session import read_hot
+    from dask_awkward_spark.sources.events import (
+        _normalize_ts,
+        events_ingest_schema,
+        load_events,
+    )
+    from dask_awkward_spark.sources.tables import load_table, normalize_table
+
+    sf = "/root/testdata/sf0.01"
+    loaders = {
+        "load_table": (
+            lambda: load_table(spark, sf, "orders").schema,
+            lambda: normalize_table(spark.read.parquet(f"{sf}/orders.parquet"), "orders").schema,
+        ),
+        "load_events": (
+            lambda: load_events(spark, sf).schema,
+            lambda: _normalize_ts(spark.read.parquet(f"{sf}/events.parquet")).schema,
+        ),
+        "events_ingest_schema": (
+            lambda: events_ingest_schema(spark, sf),
+            lambda: spark.read.parquet(f"{sf}/events.parquet").schema,
+        ),
+        "read_hot": (
+            lambda: read_hot(spark, f"{sf}/region.parquet").schema,
+            lambda: spark.read.parquet(f"{sf}/region.parquet").schema,
+        ),
+    }
+    for name, (load, infer) in loaders.items():
+        load()
+        warm, schema = _jobs_of(spark, load)
+        assert warm == 0, f"{name}: {warm} Spark jobs on a warm read"
+        assert schema == infer(), name

@@ -1,11 +1,18 @@
-"""Type-edge tests: uint64, tagged unions, categorical round trip."""
+"""Type-edge tests: uint64, tagged unions, categorical round trip, and
+NestedArray types seeded without the analyzer."""
 
 from __future__ import annotations
 
 from decimal import Decimal
 
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from dask_awkward_spark.core import NestedArray, _to_python
+from dask_awkward_spark.operators import reducers as red
+from dask_awkward_spark.schema import field_type
 from dask_awkward_spark.types import (
     categorical_decode,
     categorical_encode,
@@ -90,3 +97,130 @@ def test_categorical_encode_plan_has_no_unpartitioned_window(spark):
     for frame in (coded, dictionary):
         plan = frame._jdf.queryExecution().executedPlan().toString()
         assert unpartitioned_windows(plan) == []
+
+
+# ---- seeded NestedArray types equal the analyzer's --------------------
+
+_INNER = T.StructType([T.StructField("c", T.IntegerType(), False)])
+_REC = T.StructType(
+    [
+        T.StructField("a", T.LongType(), False),
+        T.StructField("b", T.DoubleType(), True),
+        T.StructField("s", _INNER, True),
+        T.StructField("l", T.ArrayType(_INNER, False), True),
+    ]
+)
+
+
+def _rec(i):
+    return {"a": i, "b": None if i % 2 else i / 2, "s": {"c": i}, "l": [{"c": i}]}
+
+
+def _analyzed_type(df, col):
+    """What Catalyst's analyzer says ``col`` over ``df`` is."""
+    return df.select(col).schema[0].dataType
+
+
+def _lambda_projection(col, dt, name):
+    """The per-element lambda spelling of a field projection."""
+    if isinstance(dt, T.ArrayType):
+        return F.transform(col, lambda x: _lambda_projection(x, dt.elementType, name))
+    return col[name]
+
+
+def _nested(spark, levels):
+    """One column ``v`` of ``_REC`` under one list level per entry of
+    ``levels`` (its containsNull, outermost first); a level that may hold
+    nulls holds a null element."""
+    dt, val = _REC, [_rec(1), _rec(2)]
+    rows = [val[0], val[1]]
+    for contains_null in reversed(levels):
+        dt = T.ArrayType(dt, contains_null)
+        rows = [[r, None] if contains_null else [r, r] for r in rows] + [[]]
+    schema = T.StructType([T.StructField("v", dt, True)])
+    return NestedArray(spark.createDataFrame([(r,) for r in rows] + [(None,)], schema))
+
+
+def _assert_seeded(arr):
+    assert arr._dtype is not None
+    assert arr._dtype == _analyzed_type(arr._df, arr._col)
+
+
+@pytest.mark.parametrize(
+    "levels", [(), (False,), (True,), (False, False), (True, False), (False, True)],
+    ids=["struct", "list", "list-nullelem", "list2", "list2-outernull", "list2-innernull"],
+)
+def test_projection_seed_equals_analyzer(spark, levels):
+    arr = _nested(spark, levels)
+    for path in (["a"], ["b"], ["s"], ["s", "c"], ["l"], ["l", "c"]):
+        out, dt, col = arr, arr.dtype, arr._col
+        for name in path:
+            out = out[name]
+            col = _lambda_projection(col, dt, name)
+            dt = _analyzed_type(arr._df, col)
+            _assert_seeded(out)
+            # the native extraction types and answers as the lambda did
+            assert out._dtype == dt
+        assert out.compute() == [_to_python(r[0]) for r in arr._df.select(col).collect()]
+
+
+def test_projection_no_seed_on_inexact_name(spark):
+    arr = _nested(spark, (True,))
+    upper = arr["A"]  # the analyzer resolves it case-insensitively
+    assert upper._dtype is None
+    assert upper.dtype == _analyzed_type(arr._df, _lambda_projection(arr._col, arr.dtype, "A"))
+    missing = arr["zz"]
+    assert missing._dtype is None
+    with pytest.raises(AnalysisException) as native:
+        missing.dtype
+    with pytest.raises(AnalysisException) as lam:
+        _analyzed_type(arr._df, _lambda_projection(arr._col, arr.dtype, "zz"))
+    assert str(native.value).splitlines()[0] == str(lam.value).splitlines()[0]
+
+
+def test_record_projection_types_by_rule(spark):
+    rec = _nested(spark, ())[0]
+    for name in ("a", "l"):
+        out = rec[name]
+        assert out._df.schema[0].dataType == field_type(rec._df.schema[0].dataType, name)
+    inner = rec["l"]["c"]  # array<struct> -> native extraction
+    assert inner._df.schema[0].dataType == T.ArrayType(T.IntegerType(), False)
+    assert inner.compute() == [1]
+
+
+def test_from_parquet_root_seed_equals_analyzer(spark, tmp_path):
+    from dask_awkward_spark import from_parquet
+
+    p = str(tmp_path / "t")
+    _nested(spark, (True,)).to_df().write.parquet(p)
+    for cols in (None, ["v"]):
+        arr = from_parquet(spark, p, columns=cols)
+        _assert_seeded(arr)
+        _assert_seeded(arr["v"]["l"]["c"])
+
+
+_LEAVES = {
+    "int": (T.IntegerType(), [1, 2, None]),
+    "long": (T.LongType(), [1, 2, None]),
+    "float": (T.FloatType(), [1.5, 2.0, None]),
+    "double": (T.DoubleType(), [1.5, 2.0, None]),
+    "decimal": (T.DecimalType(10, 2), [Decimal("1.50"), Decimal("2.00"), None]),
+}
+_SEEDED_REDUCERS = (
+    "sum", "prod", "count", "count_nonzero", "min", "max",
+    "any", "all", "mean", "var", "std",
+)
+
+
+@pytest.mark.parametrize("leaf", sorted(_LEAVES))
+def test_reducer_seed_equals_analyzer(spark, leaf):
+    dt, vals = _LEAVES[leaf]
+    schema = T.StructType([T.StructField("v", T.ArrayType(dt, True), True)])
+    arr = NestedArray(spark.createDataFrame([(vals,), ([],), (None,)], schema))
+    for op in _SEEDED_REDUCERS:
+        for axis in (1, -1):
+            _assert_seeded(getattr(red, op)(arr, axis=axis))
+    # kept dims or a masked identity change the type: the analyzer types them
+    assert red.sum(arr, axis=1, keepdims=True)._dtype is None
+    assert red.max(arr, axis=1, mask_identity=False)._dtype is None
+    assert red.argmax(arr, axis=1)._dtype is None
