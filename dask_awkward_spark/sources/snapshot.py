@@ -1506,8 +1506,14 @@ def _parse_part_value(dirname: str, simple: str):
     return None
 
 
+#: expression classes Spark counts as deterministic but folds to a new
+#: literal in each query: exactly what its ComputeCurrentTime rule
+#: replaces. Matched in the analyzed plan's JSON, where a string literal
+#: spelling one of these names is escaped and a column is an attribute.
 _TIME_VALUED_RE = re.compile(
-    r"\b(current_timestamp|current_date|now|localtimestamp|current_timezone)\("
+    r'"class":"org\.apache\.spark\.sql\.catalyst\.expressions\.'
+    r'(?:CurrentTimestamp|Now|CurrentDate|CurrentTime|LocalTimestamp'
+    r'|CurrentTimeZone)"'
 )
 
 
@@ -1518,13 +1524,13 @@ def _plan_deterministic(df: DataFrame) -> bool:
     ``deterministic`` flag, and the per-QUERY-folded time functions
     (current_timestamp & family, which Spark counts as deterministic
     but folds to a DIFFERENT literal in each execution) are rejected by
-    name from the analyzed tree. Unprovable (any inspection error) is
-    treated as non-deterministic: callers use this to skip a
-    consistency pin, so the safe answer is 'keep the pin'."""
+    expression class. Unprovable (any inspection error) is treated as
+    non-deterministic: callers use this to skip a consistency pin, so
+    the safe answer is 'keep the pin'."""
     try:
         plan = df._jdf.queryExecution().analyzed()
         return bool(plan.deterministic()) and not _TIME_VALUED_RE.search(
-            plan.toString()
+            plan.toJSON()
         )
     except Exception:
         return False
@@ -6519,11 +6525,13 @@ def _clause_projection(
     return out
 
 
-def _upcast_to_table(src: DataFrame, schema: StructType, mismatch) -> DataFrame:
-    """``src`` with each column the table also has cast to the table's
-    type where the widening lattice makes that lossless (Delta's
-    implicit MERGE upcast); other columns pass unchanged. Any other
-    type drift raises ``mismatch(column, source type, table type)``."""
+def _upcast_to_table(src: DataFrame, schema: StructType) -> DataFrame:
+    """MERGE's source with each column the table also has cast to the
+    table's type where the widening lattice makes that lossless (Delta's
+    implicit MERGE upcast: int chain, float to double, decimal growth);
+    extra source columns pass unchanged. Any other type drift of a
+    shared column (narrowing, lossy) is refused like an append's, whether
+    or not the merge writes that column."""
     table_t = {f.name: f.dataType.simpleString() for f in schema.fields}
     casts = []
     for f in src.schema.fields:
@@ -6534,7 +6542,10 @@ def _upcast_to_table(src: DataFrame, schema: StructType, mismatch) -> DataFrame:
         elif _widened(s, t) == t:
             casts.append(F.col(f.name).cast(t).alias(f.name))
         else:
-            raise ValueError(mismatch(f.name, s, t))
+            raise ValueError(
+                f"merge schema mismatch: source column {f.name!r} is {s}, "
+                f"which does not losslessly upcast to the table's {t}"
+            )
     return src.select(*casts)
 
 
@@ -6559,11 +6570,13 @@ def snapshot_merge(
 
     ``when_matched``: ``"update"`` replaces each matching target row
     with the source row's values, ``"delete"`` removes it, ``None``
-    leaves it. ``when_not_matched``: ``"insert"`` adds source rows whose
-    key matches no target row, ``("insert", condition)`` adds only those
-    of them the condition accepts (SQL string or Column over the source
-    row as struct ``s`` — Delta's ``WHEN NOT MATCHED AND cond THEN
-    INSERT``; matched clauses still see every source row),
+    leaves it; the two strings are shorthand for the one-clause lists
+    ``[(None, "update", None)]`` and ``[(None, "delete", None)]`` below
+    and run the same way. ``when_not_matched``: ``"insert"`` adds source
+    rows whose key matches no target row, ``("insert", condition)``
+    adds only those of them the condition accepts (SQL string or Column
+    over the source row as struct ``s`` — Delta's ``WHEN NOT MATCHED AND
+    cond THEN INSERT``; matched clauses still see every source row),
     ``("insert", condition, {target_col: expr})`` additionally builds
     the inserted row from expressions over ``s`` (Delta's column-list
     ``INSERT (cols) VALUES (exprs)`` — unassigned columns insert NULL,
@@ -6586,10 +6599,10 @@ def snapshot_merge(
     ``assignments`` (update only) is ``None`` for the whole source row,
     or a PARTIAL dict ``{target_col: expr}`` — unassigned columns keep
     the target's values, expressions see ``t``/``s`` and are cast to
-    the column's type; key columns may not be assigned. In clause
-    mode the source may carry EXTRA columns (CDC metadata for
-    conditions) and may OMIT table columns when no full-row
-    update/insert needs them::
+    the column's type; key columns may not be assigned. In every shape
+    the source may carry EXTRA columns (CDC metadata for conditions;
+    full-row updates and inserts ignore them) and may OMIT table
+    columns when no full-row update/insert needs them::
 
         snapshot_merge(spark, path, cdc, on=["k"], when_matched=[
             ("s.op = 'del'", "delete", None),
@@ -6606,6 +6619,15 @@ def snapshot_merge(
     ``t`` (an ``s.`` reference fails analysis, loudly), update
     assignments must be an explicit dict (no source row to copy), and
     a NULL condition never matches. Rows no clause hits stay unchanged.
+
+    The matched rows' clause outcomes are evaluated once and pinned
+    (localCheckpoint), so the counts, the committed rows and the change
+    feed agree even for a ``rand()`` condition or assignment. A lone
+    unconditional clause (the shorthand included) skips the pin when
+    Spark proves its plan deterministic and takes its counts from the
+    key-level aggregation the merge runs anyway; a conditional list
+    always pins, since its count and both writes would otherwise each
+    re-run the join.
 
     Scale shape: the source's per-key min/max (one tiny agg) prunes the
     target through the manifest stats — only files whose key range
@@ -6637,16 +6659,17 @@ def snapshot_merge(
     Delta's one; the pre-widen is idempotent and row-preserving, so a
     crash between them leaves a valid table). A source OMITTING
     pre-existing table columns is still refused for full-row shapes,
-    and clause-mode CDC sources whose extra columns are metadata
-    should keep the default — under merge_schema those extras become
-    real table columns."""
+    and CDC sources whose extra columns are metadata should keep the
+    default — under merge_schema those extras become real table
+    columns."""
     if not on:
         raise ValueError("merge needs at least one key column in on=")
-    clause_mode = isinstance(when_matched, (list, tuple))
     clauses: "list[tuple]" = []
-    if clause_mode:
+    if isinstance(when_matched, (list, tuple)):
         clauses = _merge_clauses(when_matched, on, "when_matched")
-    elif when_matched not in ("update", "delete", None):
+    elif when_matched in ("update", "delete"):
+        clauses = [(None, when_matched, None)]  # the one-clause shorthand
+    elif when_matched is not None:
         raise ValueError(f"when_matched must be update|delete|None, got {when_matched!r}")
     nm_cond, nm_assigns = None, None
     if isinstance(when_not_matched, (list, tuple)):
@@ -6700,7 +6723,7 @@ def snapshot_merge(
                 "when_not_matched_by_source must be 'delete', a clause "
                 f"list, or None, got {when_not_matched_by_source!r}"
             )
-    if when_matched is None and when_not_matched is None and not nms_clauses:
+    if not clauses and when_not_matched is None and not nms_clauses:
         raise ValueError("merge with no matched and no not-matched action is a no-op")
 
     def _zero(version, carried):
@@ -6728,8 +6751,8 @@ def snapshot_merge(
         # against the widened head. Two commits instead of Delta's one
         # (documented; the pre-widen is idempotent and row-preserving,
         # so a crash between them leaves a valid widened table). Do
-        # NOT combine with clause-mode CDC sources whose extra columns
-        # are metadata, not data — those stay merge_schema=False (the
+        # NOT combine with CDC sources whose extra columns are
+        # metadata, not data — those stay merge_schema=False (the
         # default), where extras remain invisible to the table.
         from pyspark.sql.types import StructField as _SF
 
@@ -6762,8 +6785,6 @@ def snapshot_merge(
     # the derived codes included); partial-assignment clauses write
     # exactly their dict keys
     touched: "set | None" = set()
-    if when_matched == "update" and not clause_mode:
-        touched = None  # whole source row
     for _cond, _a, _assigns in list(clauses) + nms_clauses:
         if _a != "update":
             continue
@@ -6796,48 +6817,16 @@ def snapshot_merge(
     # column-list insert (nm_assigns) builds its row from expressions,
     # so the source needs just the keys plus whatever the expressions
     # reference
-    if clause_mode:
-        need_full = (
-            when_not_matched == "insert" and nm_assigns is None
-        ) or any(a == "update" and asg is None for _c, a, asg in clauses)
-    else:
-        need_full = when_matched == "update" or (
-            when_not_matched == "insert" and nm_assigns is None
-        )
-    if clause_mode or nm_assigns is not None:
-        # partial-assignment CDC sources may omit table columns and may
-        # carry EXTRA ones (visible to conditions/assignments as s.<col>)
-        src_missing = sorted(set(names if need_full else on) - set(source.columns))
-        if src_missing:
-            raise ValueError(f"source is missing columns {src_missing}")
-        src = _upcast_to_table(
-            source, schema,
-            lambda c, s, t: f"merge schema mismatch: source column {c!r} "
-            f"is {s}, which does not losslessly upcast to the table's {t}",
-        )
-    else:
-        src_missing = sorted(set(names if need_full else on) - set(source.columns))
-        if src_missing:
-            raise ValueError(f"source is missing columns {src_missing}")
-        src = source.select(*(names if need_full else on))
-    if (
-        not clause_mode
-        and nm_assigns is None
-        and need_full
-        and src.schema.simpleString() != schema.simpleString()
-    ):
-        # a source column that LOSSLESSLY upcasts to the table's type
-        # (int chain / float->double / decimal growth — the widening
-        # lattice) is cast implicitly, Delta's merge behavior; any
-        # other drift (narrowing, lossy, renames) is refused like an
-        # append's
-        src = _upcast_to_table(
-            src, schema,
-            lambda c, s, t: f"merge schema mismatch: table has "
-            f"{schema.simpleString()}, source has {src.schema.simpleString()} "
-            f"(column {c!r}: {s} does not losslessly upcast to {t})",
-        )
-    src = src.localCheckpoint(eager=True)
+    need_full = (
+        when_not_matched == "insert" and nm_assigns is None
+    ) or any(a == "update" and asg is None for _c, a, asg in clauses)
+    # a source may omit table columns no full-row write needs and may
+    # carry EXTRA ones (visible to conditions/assignments as s.<col>,
+    # ignored by full-row projection)
+    src_missing = sorted(set(names if need_full else on) - set(source.columns))
+    if src_missing:
+        raise ValueError(f"source is missing columns {src_missing}")
+    src = _upcast_to_table(source, schema).localCheckpoint(eager=True)
     keys_ok = None
     for k in on:
         e = F.col(k).isNotNull()
@@ -6906,7 +6895,7 @@ def snapshot_merge(
         # insert side exactly as the keys_ok split routes those rows.
         # Reserved __dak_ aliases — a key column literally named
         # "count" must not collide with the aggregates.
-        need_counts = when_matched is not None or when_not_matched == "insert"
+        need_counts = bool(clauses) or when_not_matched == "insert"
         kstats = None
         if need_counts:
             kstats = (
@@ -6934,17 +6923,15 @@ def snapshot_merge(
                 )
                 .first()
             )
-        n_matched = (
-            int(kstats["__dak_m"] or 0) if when_matched is not None else 0
-        )
+        n_matched = int(kstats["__dak_m"] or 0) if clauses else 0
         fused_ins = int(kstats["__dak_ins"] or 0) if kstats is not None else 0
         if n_matched and (kstats["__dak_mx"] or 0) > 1:
             raise ValueError(
                 "merge is ambiguous: multiple source rows match the "
                 "same target row (dedupe the source on the key first)"
             )
-        parts, inserted, upd_post = [], 0, None
-        pinned_m, out_cols, n_updated, n_deleted = None, None, 0, 0
+        parts, inserted = [], 0
+        m_eval, n_updated, n_deleted = None, 0, 0
         upd_idx = [i for i, (_c, a, _g) in enumerate(clauses) if a == "update"]
         del_idx = [i for i, (_c, a, _g) in enumerate(clauses) if a == "delete"]
         # ---- WHEN NOT MATCHED BY SOURCE (VERDICT r9 item 3) ----------
@@ -6955,9 +6942,9 @@ def snapshot_merge(
         # aggregation over the unpinned frame gates which regions
         # rewrite at all — a no-hit region carries verbatim WITHOUT ever
         # materializing its rows; (2) only regions actually being
-        # rewritten are pinned (localCheckpoint, like pinned_m), and the
-        # pinned evaluation is then authoritative for the rewritten
-        # rows, the returned counts, and the change feed (a
+        # rewritten are pinned (localCheckpoint, like the matched eval
+        # frame), and the pinned evaluation is then authoritative for
+        # the rewritten rows, the returned counts, and the change feed (a
         # non-deterministic condition can re-evaluate between the gate
         # and the pin — the committed rows always follow the pin).
         nm_frame, nms_upd, nms_del = None, 0, 0
@@ -7029,7 +7016,7 @@ def snapshot_merge(
                 _nm_keep(False) if nms_clauses else tgt.join(src_n, on, "left_anti")
             )
 
-        if when_matched is None or n_matched == 0:
+        if n_matched == 0:
             if nms_clauses and hits_in:
                 # no matched-clause changes, but the third family hits
                 # inside rows: rewrite the inside files — source-matched
@@ -7040,45 +7027,53 @@ def snapshot_merge(
             else:
                 # no target row changes inside — inside files stay verbatim
                 rewritten = []
-        elif clause_mode:
+        else:
             # eval frame: one row per matched target row, the target row
             # as struct `t` and its single source row as struct `s`;
             # __dak_ci = index of the FIRST clause whose condition holds
-            # (F.when short-circuits in order, NULL never matches).
-            # localCheckpoint pins ONE evaluation so counts, the
-            # rewritten rows, and the CDF pre/postimages can never see
-            # different outcomes from a non-deterministic condition.
+            # (F.when short-circuits in order, NULL never matches), and
+            # the table columns as that clause leaves them. The counts,
+            # the rewritten rows and the CDF pre/postimages all derive
+            # from this one frame.
             tga, sra = tgt.alias("__dak_t"), src_n.alias("__dak_s")
             jc = None
             for k in on:
                 e = tga[k] == sra[k]
                 jc = e if jc is None else (jc & e)
-            joined = (
+            m_eval = (
                 tga.join(sra, jc, "inner")
                 .select(
                     F.struct(*[tga[c].alias(c) for c in names]).alias("t"),
                     F.struct(*[sra[c].alias(c) for c in src.columns]).alias("s"),
                 )
                 .withColumn("__dak_ci", _first_match_index(clauses))
+                .select(
+                    "__dak_ci",
+                    F.col("t").alias("__dak_t"),
+                    *_clause_projection(clauses, "__dak_ci", schema),
+                )
             )
-            out_cols = _clause_projection(clauses, "__dak_ci", schema)
-            # ONE materialization pins conditions AND assignment
-            # expressions: the counts, the rewritten rows, and the CDF
-            # pre/postimages all derive from this frame, so a
-            # non-deterministic clause (rand() condition or assignment)
-            # can never produce a postimage that differs from the rows
-            # actually committed
-            pinned_m = joined.select(
-                "__dak_ci",
-                F.col("t").alias("__dak_t"),
-                *out_cols,
-            ).localCheckpoint(eager=True)
-            cnt = {
-                r["__dak_ci"]: r["__dak_n"]
-                for r in pinned_m.groupBy("__dak_ci")
-                .agg(F.count(F.lit(1)).alias("__dak_n"))
-                .collect()
-            }
+            lone = len(clauses) == 1 and clauses[0][0] is None
+            if not (lone and _plan_deterministic(m_eval)):
+                # ONE materialization pins conditions AND assignment
+                # expressions, so a non-deterministic clause (rand()
+                # condition or assignment) can never produce a
+                # postimage that differs from the rows actually
+                # committed. A conditional list keeps the pin even when
+                # deterministic: its count and both writes would
+                # otherwise each re-run the join.
+                m_eval = m_eval.localCheckpoint(eager=True)
+            if lone:
+                # every matched row hits the one clause: the fused key
+                # aggregation above already counted them
+                cnt = {0: n_matched}
+            else:
+                cnt = {
+                    r["__dak_ci"]: r["__dak_n"]
+                    for r in m_eval.groupBy("__dak_ci")
+                    .agg(F.count(F.lit(1)).alias("__dak_n"))
+                    .collect()
+                }
             n_updated = sum(cnt.get(i, 0) for i in upd_idx)
             n_deleted = sum(cnt.get(i, 0) for i in del_idx)
             if n_updated + n_deleted == 0 and not (nms_clauses and hits_in):
@@ -7088,21 +7083,15 @@ def snapshot_merge(
             else:
                 rewritten = list(affected)
                 parts.append(_unmatched_in())
-                kept = (
-                    pinned_m.filter(~F.col("__dak_ci").isin(del_idx))
-                    if del_idx
-                    else pinned_m
-                )
-                # clause-hit rows transform, fall-through rows persist
-                parts.append(kept.select(*names))
-        else:
-            rewritten = list(affected)
-            parts.append(_unmatched_in())  # unmatched target
-            if when_matched == "update":
-                # one output row per matched TARGET row (dup target keys
-                # each updated), values from the single source row
-                upd_post = tgt.select(*on).join(src_n, on, "inner").select(*names)
-                parts.append(upd_post)
+                if n_deleted < n_matched:
+                    # clause-hit rows transform, fall-through rows
+                    # persist; with none left, the join is not re-read
+                    kept = (
+                        m_eval.filter(~F.col("__dak_ci").isin(del_idx))
+                        if del_idx
+                        else m_eval
+                    )
+                    parts.append(kept.select(*names))
         if hits_out:
             # the third family hit outside-region rows: those files are
             # rewrite candidates after all (kept rows pass verbatim)
@@ -7125,7 +7114,7 @@ def snapshot_merge(
             nms_del = sum(v for i, v in cnt_nm.items() if i in set(nm_del_idx))
         if when_not_matched == "insert":
             # keep ALL source columns until the insert condition (it may
-            # reference clause-mode extra columns), then project
+            # reference extra source columns), then project
             ins = src_n.join(tgt.select(*on), on, "left_anti")
             ins = ins.unionByName(src_null)
             if nm_cond is not None:
@@ -7188,41 +7177,31 @@ def snapshot_merge(
             # with the data write (guide §2.6): every frame below reads
             # pinned checkpoints or immutable committed files.
             chg = []
-            if clause_mode and (n_updated or n_deleted):
-                # exactly the clause-HIT rows: fall-through (ci == -1)
-                # rows did not change and must not pollute the feed
-                tcols = [F.col("__dak_t").getField(c).alias(c) for c in names]
-                if n_updated:
-                    hit_u = pinned_m.filter(F.col("__dak_ci").isin(upd_idx))
-                    chg += [
-                        (hit_u.select(*tcols), "update_preimage"),
-                        (hit_u.select(*names), "update_postimage"),
-                    ]
-                if n_deleted:
-                    chg.append(
-                        (
-                            pinned_m.filter(
-                                F.col("__dak_ci").isin(del_idx)
-                            ).select(*tcols),
-                            "delete",
-                        )
+            # exactly the clause-HIT rows: fall-through (ci == -1) rows
+            # did not change and must not pollute the feed
+            tcols = [F.col("__dak_t").getField(c).alias(c) for c in names]
+            if n_updated:
+                hit_u = m_eval.filter(F.col("__dak_ci").isin(upd_idx))
+                chg += [
+                    (hit_u.select(*tcols), "update_preimage"),
+                    (hit_u.select(*names), "update_postimage"),
+                ]
+            if n_deleted:
+                chg.append(
+                    (
+                        m_eval.filter(F.col("__dak_ci").isin(del_idx)).select(*tcols),
+                        "delete",
                     )
-            elif when_matched == "update" and n_matched:
-                matched = tgt.join(src_n, on, "left_semi")
-                chg += [(matched, "update_preimage"), (upd_post, "update_postimage")]
-            elif when_matched == "delete" and n_matched:
-                matched = tgt.join(src_n, on, "left_semi")
-                chg.append((matched, "delete"))
+                )
             if _nm_pinned and (nms_upd or nms_del):
                 # third-family hits: same pre/postimage discipline, from
                 # the pinned frames (a hit row's region is always pinned
                 # AND rewritten)
                 pnm = _union_all(list(_nm_pinned.values()))
-                tcols_n = [F.col("__dak_t").getField(c).alias(c) for c in names]
                 if nms_upd:
                     hit_n = pnm.filter(F.col("__dak_nci").isin(nm_upd_idx))
                     chg += [
-                        (hit_n.select(*tcols_n), "update_preimage"),
+                        (hit_n.select(*tcols), "update_preimage"),
                         (hit_n.select(*names), "update_postimage"),
                     ]
                 if nms_del:
@@ -7230,7 +7209,7 @@ def snapshot_merge(
                         (
                             pnm.filter(
                                 F.col("__dak_nci").isin(nm_del_idx)
-                            ).select(*tcols_n),
+                            ).select(*tcols),
                             "delete",
                         )
                     )
@@ -7255,12 +7234,8 @@ def snapshot_merge(
         if out is not None:
             return {
                 "version": out[0],
-                "updated_rows": (n_updated if clause_mode else (
-                    n_matched if when_matched == "update" else 0
-                )) + nms_upd,
-                "deleted_rows": (n_deleted if clause_mode else (
-                    n_matched if when_matched == "delete" else 0
-                )) + nms_del,
+                "updated_rows": n_updated + nms_upd,
+                "deleted_rows": n_deleted + nms_del,
                 "inserted_rows": inserted,
                 "rewritten_files": len(rewritten),
                 "carried_files": len(carried) + out[1],

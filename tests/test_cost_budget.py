@@ -32,6 +32,7 @@ from dask_awkward_spark.sources.snapshot import (
     snapshot_update,
     snapshot_write,
 )
+from dask_awkward_spark.sources.sqlface import snapshot_sql
 
 _GROUPS = itertools.count()
 
@@ -67,6 +68,17 @@ def _jobs(spark, stmt) -> int:
 
 _WHERE = [("id", "<", 30)]
 
+
+def _sql_upsert(spark, path):
+    _source(spark).createOrReplaceTempView("cost_budget_src")
+    return snapshot_sql(
+        spark,
+        "MERGE INTO t USING cost_budget_src s ON t.id = s.id "
+        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *",
+        {"t": path},
+    )
+
+
 #: shape -> (statement over (spark, path), warm job ceiling at local[8])
 _SHAPES = {
     "delete_cow": (
@@ -87,6 +99,13 @@ _SHAPES = {
         ),
         5,
     ),
+    "update_cow_now_literal": (
+        # a string literal spelling a time function is still a constant
+        lambda s, p: snapshot_update(
+            s, p, _WHERE, {"v": F.length(F.lit("now()")).cast("bigint")}
+        ),
+        2,
+    ),
     "update_mor": (
         lambda s, p: snapshot_update(
             s, p, _WHERE, {"v": F.col("v") + 1}, strategy="merge-on-read"
@@ -95,7 +114,25 @@ _SHAPES = {
     ),
     "merge_upsert": (
         lambda s, p: snapshot_merge(s, p, _source(s), on=["id"]),
-        17,
+        15,
+    ),
+    "merge_sql_upsert": (
+        _sql_upsert,
+        15,
+    ),
+    "merge_delete": (
+        lambda s, p: snapshot_merge(
+            s, p, _source(s), on=["id"],
+            when_matched="delete", when_not_matched=None,
+        ),
+        13,
+    ),
+    "merge_rand_clause": (
+        lambda s, p: snapshot_merge(
+            s, p, _source(s), on=["id"],
+            when_matched=[(None, "update", {"v": "rand()"})],
+        ),
+        16,
     ),
     "merge_clauses": (
         lambda s, p: snapshot_merge(
@@ -112,7 +149,7 @@ _SHAPES = {
             s, p, _source(s), on=["id"],
             when_not_matched_by_source=[("t.id >= 190", "delete", None)],
         ),
-        25,
+        23,
     ),
 }
 

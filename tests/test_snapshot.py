@@ -2853,6 +2853,66 @@ def test_update_nondeterministic_rhs_postimage_matches_data(spark, tmp_path):
     assert not _plan_deterministic(df.select(F.expr("now()").alias("x")))
 
 
+def test_update_current_time_postimage_matches_data(spark, tmp_path):
+    """current_time() folds to a new literal in each query, like
+    current_timestamp(), so a copy-on-write UPDATE assigning it must keep
+    the pin: the postimage records exactly the committed values."""
+    from dask_awkward_spark.sources.snapshot import (
+        snapshot_changes,
+        snapshot_read,
+        snapshot_update,
+        snapshot_write,
+    )
+
+    p = str(tmp_path / "ctime")
+    snapshot_write(
+        spark.range(300).select("id", F.lit("").alias("s")), p
+    )
+    snapshot_update(
+        spark, p, [("id", ">=", 0)], {"s": F.expr("cast(current_time() as string)")}
+    )
+    post = {
+        r.id: r.s
+        for r in snapshot_changes(spark, p, since=1, row_level=True)
+        .filter("_change_type = 'update_postimage'")
+        .collect()
+    }
+    data = {r.id: r.s for r in snapshot_read(spark, p).collect()}
+    assert len(post) == 300 and post == data
+
+
+@pytest.mark.parametrize(
+    "fn",
+    [
+        "current_timestamp()",
+        "now()",
+        "current_date()",
+        "current_time()",
+        "localtimestamp()",
+        "current_timezone()",
+    ],
+)
+def test_time_functions_are_not_deterministic(spark, fn):
+    """Each expression Spark folds to a per-query literal (the set its
+    ComputeCurrentTime rule replaces) keeps the consistency pin."""
+    from dask_awkward_spark.sources.snapshot import _plan_deterministic
+
+    assert not _plan_deterministic(spark.range(3).select(F.expr(fn).alias("x")))
+
+
+def test_time_function_names_elsewhere_are_deterministic(spark):
+    """The gate matches expression classes, not text: a string literal
+    spelling a time function and a column named ``now`` are stable."""
+    from dask_awkward_spark.sources.snapshot import _plan_deterministic
+
+    df = spark.range(3).withColumnRenamed("id", "now")
+    assert _plan_deterministic(df.select((F.col("now") + 1).alias("x")))
+    assert _plan_deterministic(df.select(F.lit("now()").alias("x")))
+    assert _plan_deterministic(
+        df.select(F.concat(F.lit("current_time("), F.col("now")).alias("x"))
+    )
+
+
 def test_delete_counts_from_metadata_match_scan(spark, tmp_path):
     """r13: CoW DELETE's pre-rewrite row count comes from manifest
     stats (minus DV positions) — the returned counts must equal the
